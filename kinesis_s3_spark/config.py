@@ -92,10 +92,12 @@ class S3OutputConfig:
     custom_endpoint: str | None = None
     partition_for_purpose: bool = True  # partition SDJ batches by row_type
     max_timeout_ms: int = 120_000  # retry window; maps to query restart
-    # writer tasks per partition value: 1 = one object per row_type per
-    # flush (reference behavior, KinesisS3Emitter.scala:72); >1 trades
-    # object count for parallel compression — the file-count/throughput
-    # knob at scale
+    # upper bound on the objects one row type gets per flush (before
+    # the byteLimit roll). The emitter splits only a row type larger than
+    # a fair share of the batch (its bytes over bytes/cores), into at
+    # most this many chunks; smaller types get one object each. 1 = one
+    # object per row_type per flush (reference behavior,
+    # KinesisS3Emitter.scala:72).
     writers_per_partition: int = 4
 
 

@@ -37,57 +37,35 @@ def schema_key_parts(value: Column) -> dict[str, Column]:
     }
 
 
-def _let(bound: Column, body) -> Column:
-    """Let-binding for column expressions: evaluate ``bound`` ONCE and
-    reference it many times in ``body``. Catalyst does not CSE a
-    repeated subexpression across When/regexp branches, so inlining an
-    expensive expression (a JSON parse) N times costs N evaluations
-    per row; a single-element transform() makes it a lambda variable,
-    evaluated once by construction."""
-    return F.get(F.transform(F.array(bound), body), 0)
+# One pass over the URI that always matches the whole string and
+# rewrites it to the partition string. The first alternative is
+# _IGLU_RE with its ``$`` spelled out: Java's ``$`` also matches before
+# ONE final line terminator, which the optional group consumes so the
+# rewrite drops it. The second alternative swallows any other string,
+# leaving only the separators of the replacement, ``./-``. No partition
+# string contains ``./-`` (the name segment is never empty and holds no
+# dot), so that leftover can only be a whole non-match.
+_ROW_TYPE_RE = _IGLU_RE[:-1] + r"(?:\r\n|[\n\r\u0085\u2028\u2029])?\z|^[\s\S]*\z"
+_ROW_TYPE_REPLACEMENT = "$1.$2/$3-$4"
+_NO_MATCH = "./-"
 
 
 def row_type_col(value: Column, is_failed: Column | None = None) -> Column:
     """The partition key: ``vendor.name/format-model``, or
     ``unpartitioned`` when the record is not a valid self-describing
     JSON, or ``reading_error`` for already-failed records
-    (Common.scala:62-70). The JSON parse runs once per row (hot path:
-    every record of every micro-batch goes through this)."""
+    (Common.scala:62-70).
 
-    def build(m: Column) -> Column:
-        # The bound variable is the WHOLE regex match (group 0): when
-        # the anchored _IGLU_RE matches, the URI is exactly
-        # iglu:seg1/seg2/seg3/seg4 with seg4 = model-rev-add, so the
-        # groups are recoverable with plain splits — vendor/name/format
-        # are path segments 1-3 and model is seg4 up to its first '-'
-        # (the regex guarantees 4 segments and an all-digit model, so
-        # the split-based parts equal the former per-group extractions
-        # on every matching input; non-matches were and are
-        # UNPARTITIONED).
-        parts = F.split(F.substring(m, 6, 2_000_000), "/")
-        model = F.element_at(F.split(F.element_at(parts, 4), "-"), 1)
-        return F.when(
-            m != "",
-            F.concat(
-                F.element_at(parts, 1),
-                F.lit("."),
-                F.element_at(parts, 2),
-                F.lit("/"),
-                F.element_at(parts, 3),
-                F.lit("-"),
-                model,
-            ),
-        ).otherwise(F.lit(UNPARTITIONED))
-
-    # r12 optimization: the loader's hottest expression (every record
-    # of every micro-batch). The expensive work — the JSON parse AND
-    # one regex execution — is the _let-bound input, so it runs ONCE
-    # per row in whole-stage codegen; only the cheap split/concat body
-    # is interpreted lambda territory. The previous shape bound just
-    # the JSON parse and ran FOUR regexp_extract group pulls inside
-    # the interpreted body (measured ~0.4-0.5 s/M rows slower).
-    partition = _let(
-        F.regexp_extract(F.get_json_object(value, "$.schema"), _IGLU_RE, 0), build
+    The loader's hottest expression (every record of every
+    micro-batch), so it is one code-generated expression that parses
+    the JSON once and runs one regex per row, and references each
+    intermediate once (Catalyst does not share a subexpression between
+    a condition and its branch)."""
+    uri = F.coalesce(F.get_json_object(value, "$.schema"), F.lit(""))
+    partition = F.replace(
+        F.regexp_replace(uri, _ROW_TYPE_RE, _ROW_TYPE_REPLACEMENT),
+        F.lit(_NO_MATCH),
+        F.lit(UNPARTITIONED),
     )
     if is_failed is not None:
         partition = F.when(is_failed, F.lit(READING_ERROR)).otherwise(partition)

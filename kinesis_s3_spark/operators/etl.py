@@ -627,9 +627,10 @@ def etl_raw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks the hash. Output dir keyed by applicationId (the
     bad-row-archive concurrency precedent).
 
-    Scale: emit()'s own path (one repartition by writer salt, task-side
-    gzip); the read-back is a parallel text scan with unbase64 in-scan.
-    Nothing driver-sized beyond the 1-row aggregate."""
+    Scale: emit()'s own path (rows routed to one sized writer task per
+    core, task-side gzip); the read-back is a parallel text scan with
+    unbase64 in-scan.
+    Nothing driver-sized beyond the one-row-per-row-type aggregate."""
     import os
     import shutil
     import tempfile

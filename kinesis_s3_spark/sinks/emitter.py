@@ -31,13 +31,19 @@ Spark-first translation:
 - bad rows           → ``bad_row_json_col`` JSON to the dead-letter
                        path (O16/O17).
 
-Scale: the only shuffle is the optional pre-write repartition on
-``row_type`` (keeps one writer task per partition value instead of
-#tasks × #partitions small files — the 100 TB file-count guard).
+Scale: a batch on at most half as many partitions as there are cores
+is spread before any per-row work: a hash repartition on the payload
+lets the parse, the cache build and the per-type aggregate run on
+every core. The aggregate's few rows (one per row type) then
+size the write: each row type gets chunks in proportion to its bytes
+(capped by ``writers_per_partition``), the chunks are packed onto one
+bin per core, and ``repartitionById`` sends every row to its bin — one
+write task per core and, below the cap, one object per row type.
 """
 
 from __future__ import annotations
 
+import heapq
 import logging
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -86,7 +92,12 @@ def _with_result_columns(df: DataFrame, cfg: LoaderConfig) -> DataFrame:
     corrupt non-UTF-8 payloads (binary Thrift CollectorPayload
     records, the LZO path's raison d'être). The text purposes
     (SELF_DESCRIBING JSON / ENRICHED_EVENTS TSV) normalize to string,
-    which their row-type/timestamp extraction needs anyway."""
+    which their row-type/timestamp extraction needs anyway.
+
+    The row type ``vendor.name/format-model`` is split at the slash
+    into ``row_type``/``row_subtype`` so the write nests two directory
+    levels (reference key layout, RowType.scala:28) instead of one
+    percent-escaped level."""
     if "value" not in df.columns:
         raise ValueError(f"input batch must carry a 'value' column; got {df.columns}")
     target = "binary" if cfg.purpose is Purpose.RAW else "string"
@@ -98,11 +109,42 @@ def _with_result_columns(df: DataFrame, cfg: LoaderConfig) -> DataFrame:
         )
     else:
         out = out.withColumn(ROW_TYPE_COL, F.lit("unpartitioned"))
+    out = out.withColumn(
+        ROW_SUBTYPE_COL,
+        F.when(
+            F.col(ROW_TYPE_COL).contains("/"),
+            F.substring_index(F.col(ROW_TYPE_COL), "/", -1),
+        ).otherwise(F.lit(NO_SUBTYPE)),
+    ).withColumn(ROW_TYPE_COL, F.substring_index(F.col(ROW_TYPE_COL), "/", 1))
     if cfg.purpose is Purpose.ENRICHED_EVENTS:
         out = out.withColumn("_tstamp", collector_tstamp_col(F.col("value")))
     else:
         out = out.withColumn("_tstamp", F.lit(None).cast("timestamp"))
     return out
+
+
+def _writer_bins(
+    type_bytes: dict[tuple, int], max_chunks: int, n_bins: int
+) -> dict[tuple, list[int]]:
+    """Route each row type's good bytes onto ``n_bins`` write tasks.
+
+    A row type gets ``min(max_chunks, ceil(bytes / (total / n_bins)))``
+    chunks, so only a type larger than a fair share of the batch is
+    split. The chunks go largest first onto the least-loaded bin (LPT),
+    ties broken by key, so the same batch always gets the same
+    routing. Returns, per row type, the bin of each of its chunks."""
+    total = max(1, sum(type_bytes.values()))
+    chunks = []
+    for key, b in type_bytes.items():
+        n = max(1, min(max_chunks, -(-b * n_bins // total)))
+        chunks += [(b / n, key)] * n
+    load = [(0.0, i) for i in range(n_bins)]
+    bins: dict[tuple, list[int]] = {}
+    for size, key in sorted(chunks, key=lambda c: (-c[0], c[1])):
+        used, i = heapq.heappop(load)
+        heapq.heappush(load, (used + size, i))
+        bins.setdefault(key, []).append(i)
+    return bins
 
 
 def emit(
@@ -133,17 +175,28 @@ def emit(
     now = now or datetime.now(timezone.utc)
     if bad_sink is None:
         bad_sink = build_bad_sink(cfg)
+    # one partition per core before the parse: a batch on few partitions
+    # (a small micro-batch, one shard) would otherwise run the row-type
+    # parse, the cache build and the aggregate below as one task each.
+    # The raw payload is hashed, so the source is still read once. A
+    # batch that already spans at least half the cores (many files or
+    # shards) is left as it is: there, a second shuffle of the raw
+    # payloads cost more than it evened out (stream_open_loop latency,
+    # 4 cores).
+    n_bins = batch_df.sparkSession.sparkContext.defaultParallelism
+    if 2 * batch_df.rdd.getNumPartitions() <= n_bins:
+        batch_df = batch_df.repartition(n_bins, "value")
     df = _with_result_columns(batch_df, cfg).cache()
     is_raw = cfg.purpose is Purpose.RAW
     gzip_family = cfg.output.s3.compression in (
         Compression.GZIP,
         Compression.GZIP_INDEXED,
     )
-    # largest framed record as it will land ON DISK — sizes the
-    # byteLimit file roll below. Text purposes: payload BYTES (not
-    # chars — octet_length) + newline; RAW through a line sink: the
-    # base64 line (4·⌈n/3⌉ chars) + newline; RAW through parquet: the
-    # bytes themselves.
+    # framed record as it will land ON DISK — sizes the writer routing
+    # and the byteLimit file roll below. Text purposes: payload BYTES
+    # (not chars — octet_length) + newline; RAW through a line sink:
+    # the base64 line (4·⌈n/3⌉ chars) + newline; RAW through parquet:
+    # the bytes themselves.
     if is_raw:
         rec_len = (
             (F.floor((F.length("value") + 2) / 3) * 4 + 1)
@@ -152,15 +205,25 @@ def emit(
         )
     else:
         rec_len = F.octet_length("value") + 1
+    good_len = F.when(~F.col("is_bad"), rec_len)
     try:
-        agg = df.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("is_bad").cast("int")).alias("n_bad"),
-            F.min("_tstamp").alias("earliest"),
-            # same single aggregation pass
-            F.max(F.when(~F.col("is_bad"), rec_len)).alias("max_rec"),
-        ).collect()[0]
-        n, n_bad = agg["n"] or 0, agg["n_bad"] or 0
+        # one row per row type: the batch Meta, the roll size and the
+        # writer routing all come from these few rows
+        per_type = (
+            df.groupBy(ROW_TYPE_COL, ROW_SUBTYPE_COL)
+            .agg(
+                F.count("*").alias("n"),
+                F.count_if("is_bad").alias("n_bad"),
+                F.sum(good_len).alias("bytes"),
+                F.max(good_len).alias("max_rec"),
+                F.min("_tstamp").alias("earliest"),
+            )
+            .collect()
+        )
+        n = sum(r["n"] for r in per_type)
+        n_bad = sum(r["n_bad"] for r in per_type)
+        max_rec = max((r["max_rec"] for r in per_type if r["max_rec"]), default=None)
+        earliest = min((r["earliest"] for r in per_type if r["earliest"]), default=None)
 
         out_dir = cfg.output.s3.path.rstrip("/")
         if cfg.output.s3.date_format:
@@ -169,31 +232,35 @@ def emit(
             out_dir = f"{out_dir}/run={run_id}"
         batch_dir = f"{out_dir}/batch_id={batch_id}"
 
-        good = df.filter(~F.col("is_bad"))
         if n - n_bad > 0:
-            # bounded writer fan-out: k tasks per row_type value — the
-            # file-count vs compression-parallelism knob (k=1 reproduces
-            # the reference's one-object-per-partition-per-flush,
-            # KinesisS3Emitter.scala:72; k>1 keeps all cores compressing
-            # when there are few row types)
-            k = max(1, cfg.output.s3.writers_per_partition)
-            # split "vendor.name/format-model" at the slash so the write
-            # nests two directory levels (reference key layout,
-            # RowType.scala:28) instead of one percent-escaped level
-            typed = good.select(
-                F.substring_index(F.col(ROW_TYPE_COL), "/", 1).alias(ROW_TYPE_COL),
-                F.when(
-                    F.col(ROW_TYPE_COL).contains("/"),
-                    F.substring_index(F.col(ROW_TYPE_COL), "/", -1),
-                )
-                .otherwise(F.lit(NO_SUBTYPE))
-                .alias(ROW_SUBTYPE_COL),
-                "value",
+            # writers_per_partition caps the chunks of one row type (1
+            # reproduces the reference's one-object-per-partition-per-
+            # flush, KinesisS3Emitter.scala:72); _writer_bins packs the
+            # chunks onto one write task per core
+            bins = _writer_bins(
+                {
+                    (r[ROW_TYPE_COL], r[ROW_SUBTYPE_COL]): r["bytes"] or 0
+                    for r in per_type
+                    if r["n"] > r["n_bad"]
+                },
+                max(1, cfg.output.s3.writers_per_partition),
+                n_bins,
             )
-            routed = typed.repartition(
-                F.col(ROW_TYPE_COL),
-                F.col(ROW_SUBTYPE_COL),
-                F.pmod(F.crc32(F.col("value").cast("binary")), F.lit(k)),
+            bins_of_type = F.element_at(
+                F.create_map(
+                    *(
+                        x
+                        for (rt, st), ids in bins.items()
+                        for x in (F.lit(f"{rt}/{st}"), F.array(*map(F.lit, ids)))
+                    )
+                ),
+                F.concat_ws("/", ROW_TYPE_COL, ROW_SUBTYPE_COL),
+            )
+            chunk = F.pmod(F.crc32(F.col("value").cast("binary")), F.size(bins_of_type))
+            routed = (
+                df.filter(~F.col("is_bad"))
+                .select(ROW_TYPE_COL, ROW_SUBTYPE_COL, "value")
+                .repartitionById(n_bins, F.element_at(bins_of_type, chunk.cast("int") + 1))
             )
             if is_raw and gzip_family:
                 # RAW bytes through a line-oriented sink: one base64
@@ -219,10 +286,9 @@ def emit(
             # byteLimit. A single record larger than byteLimit still
             # gets its own file (the reference, too, always flushes at
             # least one record per object). No extra shuffle or pass.
-            if cfg.buffer.byte_limit and agg["max_rec"]:
+            if cfg.buffer.byte_limit and max_rec:
                 writer = writer.option(
-                    "maxRecordsPerFile",
-                    max(1, cfg.buffer.byte_limit // int(agg["max_rec"])),
+                    "maxRecordsPerFile", max(1, cfg.buffer.byte_limit // int(max_rec))
                 )
             # mode=overwrite into the per-batch_id dir: a batch replayed
             # after a crash/restart REPLACES its previous (possibly
@@ -284,7 +350,7 @@ def emit(
             batch_id=batch_id,
             count=int(n),
             bad_count=int(n_bad),
-            earliest_tstamp=agg["earliest"],
+            earliest_tstamp=earliest,
             output_path=batch_dir,
         )
     finally:

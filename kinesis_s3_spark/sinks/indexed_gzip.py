@@ -35,10 +35,20 @@ iterator exactly once and keeps only compressor state.
 from __future__ import annotations
 
 import os
+import sys
 import zlib
 from collections.abc import Iterable, Iterator
 
+from pyspark import cloudpickle
+
 DEFAULT_SYNC_EVERY = 100
+
+# The Spark sinks below run this module's writers inside Python workers.
+# Pickled by reference, those would need ``kinesis_s3_spark`` importable
+# on every worker (PYTHONPATH, the driver's working directory or
+# addPyFile); pickled by value, the module only needs the standard
+# library there.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 class IndexedGzipWriter:

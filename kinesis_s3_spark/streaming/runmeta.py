@@ -28,6 +28,7 @@ is the price of the stronger effectively-exactly-once file sink.
 from __future__ import annotations
 
 import json
+import re
 import uuid
 from datetime import datetime, timezone
 
@@ -37,6 +38,22 @@ from pyspark.sql import SparkSession
 # touches the latest uncommitted batch, so anything this far back is
 # garbage from the checkpoint's point of view
 _BATCH_TIME_RETENTION = 100
+
+# What Spark's partition discovery reads as a number, over the hex
+# alphabet: integers, and Java floating literals such as ``12e5``,
+# ``7d`` or ``3e4f`` (Double.parseDouble takes a d/f suffix). A run id
+# like that turns ``run=<id>`` into a numeric column that drops leading
+# zeros, and a long exponent stalls the discovery for minutes.
+_NUMERIC = re.compile(r"[0-9]+(e[0-9]+)?[df]?")
+
+
+def _mint_run_id() -> str:
+    """12 hex digits of a uuid4 that contain a letter and do not parse
+    as a number."""
+    while True:
+        run_id = uuid.uuid4().hex[:12]
+        if not _NUMERIC.fullmatch(run_id):
+            return run_id
 
 
 class RunMeta:
@@ -77,7 +94,7 @@ class RunMeta:
         existing = self._read(p)
         if existing is not None:
             return existing["run_id"]
-        run_id = uuid.uuid4().hex[:12]
+        run_id = _mint_run_id()
         self._write(
             p, {"run_id": run_id, "created_at": datetime.now(timezone.utc).isoformat()}
         )
