@@ -15,6 +15,10 @@ and BOTH scales land in the artifact: per-query sf1 seconds in the
 final line (2 dp, kept compact for the driver's tail capture) and full
 detail in BENCH_DETAIL.json. Set SPARK_GRAFT_BENCH_SF1=0 to skip the
 10× pass (e.g. when iterating on one query).
+
+Wall times are reported data, not a gate: time on a shared host swings
+2× between runs of identical code. The regression gate is the executed
+shuffle-stage budget in tools/plan_audit.py.
 """
 
 from __future__ import annotations
@@ -196,155 +200,6 @@ HEADLINE = [
 
 WARM_RUNS = 3  # warm samples per query; reported value = median
 
-# Pinned per-query baseline (VERDICT r5 task #3): round 5's warm
-# medians + spreads. Any query slower than median + max(2*spread,
-# 25% of median) is flagged in the artifact — the plan-budget pattern
-# applied to time, so suite drift is caught mechanically instead of
-# by judge-side diffing. Refresh the file when a faster plan lands
-# (ratchet down, never silently up).
-BASELINE_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "tools", "bench_baseline.json"
-)
-
-
-def load_baseline(key: str = "queries") -> dict[str, dict]:
-    """``key='queries'`` → the sf0.1 warm-median baselines;
-    ``key='sf1'`` → the 10× single-run baselines (VERDICT r6 task #3:
-    the sf1 column is where scale regressions show — guard it with the
-    same drift-normalized ratchet as sf0.1)."""
-    try:
-        with open(BASELINE_PATH) as fh:
-            return json.load(fh).get(key) or {}
-    except (OSError, json.JSONDecodeError):
-        return {}
-
-
-# Above this suite-wide ratio-to-baseline, the run is flagged as a
-# whole: a GLOBAL slowdown (session config, scan splitting — the r6
-# openCostInBytes incident) must not hide inside the normalizer below.
-DRIFT_ALERT = 1.35
-
-
-def suite_drift(timings: dict[str, float], baseline: dict[str, dict]) -> float:
-    """Median per-query ratio to baseline across the whole suite — the
-    run's environment factor. Two idle-box r6 full-suite runs came in
-    with near-uniform per-query ratios around 1.2x and 1.4x (15 and 31
-    flags, unrelated operators, no code change between them): shared-
-    host VM throughput variance, not plans. The median over 90+ queries
-    estimates that factor robustly (a handful of true regressions
-    cannot move it)."""
-    ratios = sorted(
-        t / baseline[q]["median"]
-        for q, t in timings.items()
-        if q in baseline and baseline[q]["median"] > 0
-    )
-    if not ratios:
-        return 1.0
-    return round(statistics.median(ratios), 4)
-
-
-def flag_regressions(
-    timings: dict[str, float], baseline: dict[str, dict], drift: float = 1.0
-) -> dict[str, dict]:
-    """Pure so tests can inject a slowdown: queries whose DRIFT-
-    NORMALIZED warm median exceeds baseline median + max(2*spread,
-    25% of median, 0.15 s). The absolute floor is the local[32]
-    scheduler-noise scale: without it, sub-second queries carry
-    tens-of-ms tolerances and the flag set churns run to run on
-    environment jitter (r6 observed two consecutive suites flag 15
-    queries each with only 6 in common, most within ~5 ms of their
-    limit). A real plan regression is idiosyncratic — one query,
-    usually well over 2x — so it still fires after dividing out the
-    suite-level drift; a uniformly slow box fires the DRIFT_ALERT
-    instead (recorded in the artifact), never 31 per-query flags.
-
-    Known blind spot (r9, documented after three rotating flag sets in
-    one session): host variance can be CLASS-correlated, not uniform —
-    python-worker- and driver-loop-heavy queries (Arrow UDF decode,
-    GD/Lloyd/power-iteration loops, many-small-job plans) measured
-    1.2-1.8x their pins on sessions where scan-bound controls sat at
-    1.0x, so the suite-median normalizer passes them through as flags.
-    Protocol when that happens: isolated 5-run probes with scan-bound
-    controls; re-pin only probe-confirmed values with provenance under
-    repin_* keys; tools/cross_round_check.py guards the long horizon
-    against silent ratchet-up."""
-    norm = max(drift, 1.0)  # a fast box never excuses absolute slowness
-    flags: dict[str, dict] = {}
-    for q, t in timings.items():
-        b = baseline.get(q)
-        if not b:
-            continue
-        limit = b["median"] + max(2 * b["spread"], 0.25 * b["median"], 0.15)
-        if t / norm > limit:
-            flags[q] = {
-                "sec": t,
-                "drift_adj_sec": round(t / norm, 3),
-                "baseline_sec": b["median"],
-                "limit_sec": round(limit, 3),
-            }
-    return flags
-
-
-def flag_sf1_regressions(
-    times: dict[str, float], baseline: dict[str, dict], drift: float = 1.0
-) -> dict[str, dict]:
-    """sf1 ratchet (pure, injection-tested like flag_regressions).
-    sf1 timings are SINGLE runs on a warm JVM, so the tolerance is
-    wider than the sf0.1 warm-median ratchet: drift-normalized time
-    above baseline + max(35% of baseline, 1.0 s) flags. The drift
-    factor is the sf1 suite's own median ratio-to-baseline — a 10×
-    pass on a loaded box drifts as a whole, one regressed plan does
-    not."""
-    norm = max(drift, 1.0)
-    flags: dict[str, dict] = {}
-    for q, t in times.items():
-        b = baseline.get(q)
-        if not b:
-            continue
-        limit = b["median"] + max(0.35 * b["median"], 1.0)
-        if t / norm > limit:
-            flags[q] = {
-                "sec": t,
-                "drift_adj_sec": round(t / norm, 3),
-                "baseline_sec": b["median"],
-                "limit_sec": round(limit, 3),
-            }
-    return flags
-
-def flag_loader_regression(
-    loader: dict[str, float], baseline: dict[str, float], drift: float = 1.0
-) -> dict[str, dict]:
-    """Loader-throughput ratchet (VERDICT r10 next #2: the rows/sec
-    number dropped 27% round-over-round and nothing watched it). Same
-    shape as the query ratchets but direction-reversed — throughput
-    regresses DOWN — and normalized by the suite drift factor: a box
-    running queries at 1.3x their pins delivers proportionally fewer
-    rows/sec, so the in-suite number is multiplied back up before the
-    compare. Flags when drift-adjusted rows/sec falls below
-    pin − max(1·spread, 15% of pin) — tightened from 2·spread/25%
-    (ADVICE r11: with the r11 pin's spread the old threshold was a
-    ~44% drop, so the −27% r10 incident that MOTIVATED this ratchet
-    would have passed unflagged); pure for injection tests."""
-    pin = (baseline or {}).get("rows_per_sec")
-    if not pin or not loader.get("rows_per_sec"):
-        return {}
-    spread = (baseline or {}).get("spread", 0)
-    norm = max(drift, 1.0)  # a fast box never excuses absolute slowness
-    adj = round(loader["rows_per_sec"] * norm)
-    limit = round(pin - max(spread, 0.15 * pin))
-    if adj < limit:
-        return {
-            "loader": {
-                "sec": loader["rows_per_sec"],  # flag-entry convention
-                "rows_per_sec": loader["rows_per_sec"],
-                "drift_adj_rows_per_sec": adj,
-                "baseline_rows_per_sec": pin,
-                "limit_rows_per_sec": limit,
-            }
-        }
-    return {}
-
-
 SF1_DIR = "/tmp/scale10"  # tools/scale_experiment.py's 10x corpus
 
 
@@ -390,10 +245,8 @@ def run_sf1(spark, queries) -> tuple[dict[str, float], dict[str, str]]:
     compile + codegen + page-cache for THESE paths — the sf0.1 medians
     warm different plans over different files), then one measured run.
     The r7 isolated re-probes showed 2-5× cold-vs-warm spreads on the
-    heavier queries (e.g. text_gopher_repetition 8.98 → 1.86 s), and
-    the committed sf1 baselines come from the warm protocol
-    (tools/scale_experiment.py) — mixing cold measurements into a warm
-    ratchet produced a spurious 10-query flag list. Guarded operators
+    heavier queries (e.g. text_gopher_repetition 8.98 → 1.86 s), so a
+    cold number would mostly measure compilation. Guarded operators
     that refuse at this scale are recorded as errors, not silently
     dropped."""
     times: dict[str, float] = {}
@@ -410,174 +263,6 @@ def run_sf1(spark, queries) -> tuple[dict[str, float], dict[str, str]]:
         except Exception as e:
             errors[name] = str(e).split("\n")[0][:120]
     return times, errors
-
-
-PROBE_CONTROL = "q1_pricing_summary"  # scan-bound control for solo probes
-# Host drift is CLASS-correlated (the r9-documented blind spot): the
-# scan-bound q1 control can read 1.0x while python-worker-heavy
-# queries run 1.3-1.9x their pins. Auto-triage therefore probes a
-# second, WORKER-class control (Arrow decode, pinned, code never hot)
-# and adjusts by the MAX control ratio — the most generous host-factor
-# reading. A genuine single-query plan regression still fires: the
-# controls are unchanged code and do not inflate with it.
-PROBE_CONTROLS = (PROBE_CONTROL, "mm_image_decode_stub")
-
-# ADVICE r11 (bench.py:492): the control ratio can close flags, so it
-# must itself be trustworthy. Two guards:
-# 1. a control whose SOURCE changed since its pin no longer measures
-#    host drift (its own code change may have moved its number) — its
-#    ratio is excluded. Fingerprints of the declared source files are
-#    pinned in tools/bench_baseline.json["control_fingerprints"].
-# 2. the accepted ratio is capped: beyond CTL_CAP the "host factor"
-#    reading is an anomaly (noisy probe, swapping box), and letting it
-#    deflate flags would self-close real regressions. Capping keeps
-#    the adjustment conservative — more flags stay open for the human
-#    worktree protocol, none silently vanish.
-CTL_CAP = 2.0
-CONTROL_SOURCES = {
-    "q1_pricing_summary": ("kinesis_s3_spark/operators/relational.py",),
-    "mm_image_decode_stub": (
-        "kinesis_s3_spark/operators/multimodal.py",
-        "kinesis_s3_spark/multimodal/codecs.py",
-    ),
-}
-
-
-def control_fingerprint(name: str) -> str:
-    """sha256 over the control query's declared source files (the query
-    module plus any shared hot-path module, e.g. the Arrow decode path
-    both mm_* controls and real queries ride)."""
-    import hashlib
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.sha256()
-    for rel in CONTROL_SOURCES.get(name, ()):
-        with open(os.path.join(repo, rel), "rb") as fh:
-            h.update(fh.read())
-    return h.hexdigest()
-
-
-def auto_triage(detail: dict, provenance: dict, sf_dir: str) -> None:
-    """Self-triaging final bench (VERDICT r10 next #1): every flag with
-    no matching provenance entry is immediately re-measured SOLO — a
-    subprocess ``tools/probe.py`` run (fresh JVM, fresh session) with
-    the scan-bound q1 control — and the isolated number + verdict are
-    embedded in the flag entry itself. Flags whose control-adjusted
-    isolated time sits within their limit are churn: a provenance entry
-    (keyed by the flag's baseline, per the stale-closure fix) is
-    appended to tools/bench_provenance.json so driver-final artifacts
-    arrive self-triaged and rc returns to 0. A flag that REPRODUCES in
-    isolation stays untriaged (nonzero rc): the pin-commit worktree
-    comparison that separates host class drift from a code regression
-    is a human step by design. Mutates ``detail``'s flag maps and
-    ``provenance`` in place."""
-    import subprocess
-
-    from tools.flag_closure_check import (
-        KEY_FIELD,
-        PROVENANCE_PATH,
-        SECTIONS,
-        covering_note,
-    )
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    jobs: dict[str, set[str]] = {}
-    fresh: list[tuple[str, str, dict]] = []
-    for det_key, prov_key in SECTIONS.items():
-        for q, entry in (detail.get(det_key) or {}).items():
-            if covering_note(provenance, prov_key, q, entry) is None:
-                d = SF1_DIR if prov_key == "sf1" else sf_dir
-                # the loader flag probes via the __loader__ pseudo-query
-                jobs.setdefault(d, set()).add("__loader__" if prov_key == "loader" else q)
-                fresh.append((prov_key, q, entry))
-    if not fresh:
-        return
-    results: dict[tuple[str, str], dict] = {}
-    controls: dict[str, float] = {}
-    for d, names in sorted(jobs.items()):
-        cmd = [
-            sys.executable,
-            os.path.join(repo, "tools", "probe.py"),
-            d,
-            ",".join(list(PROBE_CONTROLS) + sorted(names)),
-            "--warm",
-            "3",
-        ]
-        try:
-            out = subprocess.run(
-                cmd, capture_output=True, text=True, timeout=1800, cwd=repo
-            )
-            parsed = json.loads(out.stdout.strip().splitlines()[-1])
-        except Exception as exc:  # a failed probe leaves its flags untriaged (loud)
-            for n in names:
-                results[(d, n)] = {"error": f"{type(exc).__name__}: {exc}"}
-            continue
-        pins = load_baseline("sf1" if d == SF1_DIR else "queries")
-        fps = load_baseline("control_fingerprints")
-        ratios = []
-        for c in PROBE_CONTROLS:
-            if c not in parsed or not pins.get(c, {}).get("median"):
-                continue
-            if fps.get(c) and fps[c] != control_fingerprint(c):
-                # control's own source changed since its pin — its
-                # ratio can no longer stand in for host drift
-                continue
-            ratios.append(parsed[c]["median"] / pins[c]["median"])
-        controls[d] = round(min(max(ratios), CTL_CAP), 3) if ratios else 1.0
-        for n in names:
-            if n in parsed:
-                results[(d, n)] = parsed[n]
-    stamp = time.strftime("%Y-%m-%d", time.gmtime())
-    changed = False
-    for prov_key, q, entry in fresh:
-        d = SF1_DIR if prov_key == "sf1" else sf_dir
-        probe_name = "__loader__" if prov_key == "loader" else q
-        r = results.get((d, probe_name), {"error": "probe returned no result"})
-        if "error" in r:
-            entry["auto_probe"] = r
-            continue
-        ctl = max(controls.get(d, 1.0), 1.0)  # a fast box never excuses slowness
-        if prov_key == "loader":
-            # throughput: direction reversed — a slow box UNDERSTATES
-            # rows/sec, so multiply back up before comparing to the pin
-            adj = round(r["median"] * ctl)
-            churn = adj >= entry["limit_rows_per_sec"]
-            limit_txt = f"limit {entry['limit_rows_per_sec']} rows/s"
-            unit = " rows/s"
-        elif prov_key == "cross_round":
-            # mirror tools/cross_round_check: a flag needs ratio > 1.5
-            # AND +0.2 s absolute — churn when either fails in isolation
-            adj = round(r["median"] / ctl, 3)
-            prev = entry["prev_sec"]
-            churn = adj / prev <= 1.5 or adj - prev <= 0.2
-            limit_txt = f"cross-round limit {round(prev * 1.5, 3)}s (1.5x r_prev {prev})"
-            unit = "s"
-        else:
-            adj = round(r["median"] / ctl, 3)
-            churn = adj <= entry["limit_sec"]
-            limit_txt = f"limit {entry['limit_sec']}s"
-            unit = "s"
-        verdict = "churn" if churn else "reproduces"
-        entry["auto_probe"] = {
-            "isolated_median": r["median"],
-            "control_ratio": controls.get(d, 1.0),
-            "drift_adjusted": adj,
-            "verdict": verdict,
-        }
-        if churn:
-            field = KEY_FIELD[prov_key]
-            note = (
-                f"auto-probe (bench.py self-triage, {stamp}): flagged "
-                f"{entry['sec']}{unit} in-suite; isolated probe {r['median']}{unit} "
-                f"(control {controls.get(d, 1.0)}x its pin) -> {adj}{unit} adjusted "
-                f"vs {limit_txt} — within limit; churn, no re-pin."
-            )
-            provenance.setdefault(prov_key, {})[q] = {"note": note, field: entry[field]}
-            entry["provenance"] = note
-            changed = True
-    if changed:
-        with open(PROVENANCE_PATH, "w") as fh:
-            json.dump(provenance, fh, indent=1)
 
 
 def materialize(df) -> None:
@@ -678,52 +363,14 @@ def main() -> None:
         timings[name] = round(statistics.median(samples), 3)
         spread[name] = round(max(samples) - min(samples), 3)
 
-    baseline = load_baseline()
-    drift = suite_drift(timings, baseline)
-    regressions = flag_regressions(timings, baseline, drift)
-
-    # cross-ROUND ratchet (VERDICT r8 next #2): the pin file above is a
-    # within-round gate since the r8 re-seed; this compares against the
-    # PREVIOUS round's committed warm medians (tools/bench_rounds.json,
-    # snapshotted once per round — see tools/cross_round_check.py)
-    from tools.cross_round_check import cross_round_regressions, prev_round_medians
-
-    prev_label, prev_medians = prev_round_medians()
-    xround_flags, xround_drift = cross_round_regressions(timings, prev_medians)
-
     loader = loader_throughput(spark, sf_dir)
-    loader_flags = flag_loader_regression(loader, load_baseline("loader"), drift)
 
     sf1_times: dict[str, float] = {}
     sf1_errors: dict[str, str] = {}
-    sf1_drift = 1.0
-    sf1_regressions: dict[str, dict] = {}
     if ensure_scale10(spark):
         sf1_times, sf1_errors = run_sf1(spark, queries)
-        sf1_baseline = load_baseline("sf1")
-        sf1_drift = suite_drift(sf1_times, sf1_baseline)
-        sf1_regressions = flag_sf1_regressions(sf1_times, sf1_baseline, sf1_drift)
 
     total = round(sum(timings.values()), 3)
-    # flag-closure discipline (VERDICT r9 next #3): every flag carries
-    # its triage provenance string INSIDE the artifact when one exists
-    # (tools/bench_provenance.json), so a committed detail file is
-    # self-documenting; flags WITHOUT provenance are listed in
-    # untriaged_flags and turn the exit code nonzero — a final driver
-    # bench that ships new unprobed flags is loud, not silent.
-    from tools.flag_closure_check import covering_note, load_provenance, untriaged_flags
-
-    provenance = load_provenance()
-    for flag_map, prov_key in (
-        (regressions, "warm"),
-        (sf1_regressions, "sf1"),
-        (xround_flags, "cross_round"),
-        (loader_flags, "loader"),
-    ):
-        for q, entry in flag_map.items():
-            note = covering_note(provenance, prov_key, q, entry)
-            if note:
-                entry["provenance"] = note
     # Full detail (cold timings, warm spread) goes to a sidecar file:
     # round 3's final line carried all three 41-entry maps and outgrew
     # the driver's stdout tail capture (BENCH_r03 "parsed": null). The
@@ -736,37 +383,13 @@ def main() -> None:
         "cold_sec": cold,
         "cold_total_sec": round(sum(cold.values()), 3),
         "warm_spread_sec": spread,
-        "regressions_vs_baseline": regressions,
-        "suite_drift": drift,
-        "drift_alert": drift > DRIFT_ALERT,
-        "cross_round_vs": prev_label,
-        "cross_round_drift": xround_drift,
-        "cross_round_regressions": xround_flags,
         "loader": loader,
-        "loader_regression": loader_flags,
         "sf1_single_run_sec": sf1_times,
         "sf1_errors": sf1_errors,
         "sf1_total_sec": round(sum(sf1_times.values()), 2),
-        "sf1_regressions_vs_baseline": sf1_regressions,
-        "sf1_suite_drift": sf1_drift,
     }
-    open_flags = untriaged_flags(detail, provenance)
-    # write the artifact BEFORE auto-triage (ADVICE r11 bench.py:711):
-    # a crash inside the triage subprocess handling must not lose the
-    # whole suite's results after a full bench run
     with open(detail_path, "w") as fh:
         json.dump(detail, fh, indent=1)
-    if open_flags and os.environ.get("SPARK_GRAFT_BENCH_AUTOPROBE", "1") != "0":
-        # free the bench JVM before the solo sessions — overlapping
-        # Spark runs are exactly the contention the probes must escape
-        spark.stop()
-        try:
-            auto_triage(detail, provenance, sf_dir)
-        except Exception as exc:  # keep the artifact; record the failure
-            detail["auto_triage_error"] = f"{type(exc).__name__}: {exc}"
-        open_flags = untriaged_flags(detail, provenance)
-        with open(detail_path, "w") as fh:
-            json.dump(detail, fh, indent=1)
     line = {
         "metric": "headline_suite_wall_sec",
         "value": total,
@@ -775,12 +398,6 @@ def main() -> None:
         "n_queries": len(timings),
         "sf": float(sf),
         "loader": loader,
-        "n_regressions": len(regressions),
-        "regressed": sorted(regressions),
-        "suite_drift": drift,
-        "cross_round_vs": prev_label,
-        "cross_round_drift": xround_drift,
-        "cross_round_regressions": sorted(xround_flags),
     }
     if sf1_times:
         # array aligned with the `queries` map's key order (HEADLINE
@@ -793,20 +410,11 @@ def main() -> None:
             "n_queries": len(sf1_times),
             "n_errors": len(sf1_errors) - n_skipped,
             "n_skipped": n_skipped,
-            "n_regressions": len(sf1_regressions),
-            "regressed": sorted(sf1_regressions),
-            "suite_drift": sf1_drift,
             "sec_by_query_in_queries_order": [
                 sf1_times.get(n) for n in HEADLINE if n in sf1_times or n in sf1_errors
             ],
         }
-    line["untriaged_flags"] = open_flags
     print(json.dumps(line))
-    if open_flags:
-        # nonzero exit (VERDICT r9 next #3): the artifact above is
-        # complete — the rc only marks that its flag sets need the
-        # solo-probe protocol + provenance before the detail is shipped
-        sys.exit(1)
 
 
 if __name__ == "__main__":

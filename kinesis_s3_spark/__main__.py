@@ -59,11 +59,11 @@ def main(argv: list[str] | None = None) -> int:
     def on_flush(meta) -> None:
         statsd.report(meta)
 
-    countmin = None
+    accumulators = ()
     if args.countmin_state:
         from kinesis_s3_spark.streaming.cms import CountMinAccumulator
 
-        countmin = CountMinAccumulator(args.countmin_state)
+        accumulators = (CountMinAccumulator(args.countmin_state),)
 
     try:
         query = run_loader(
@@ -71,7 +71,7 @@ def main(argv: list[str] | None = None) -> int:
             cfg,
             on_flush=on_flush,
             dedupe_watermark=args.dedupe_watermark,
-            countmin=countmin,
+            accumulators=accumulators,
         )
         query.awaitTermination()
     except Exception as e:  # noqa: BLE001 — top-level crash reporting (O20)

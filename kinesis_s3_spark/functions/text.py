@@ -46,20 +46,6 @@ def quality_signals(text: Column) -> dict[str, Column]:
     }
 
 
-def quality_score(text: Column) -> Column:
-    """A deterministic 0..1 quality score: rewards alpha content,
-    penalizes punctuation/digit soup and shouting. (Heuristic in the
-    spirit of C4/Gopher quality rules; exact weights are ours.)"""
-    s = quality_signals(text)
-    score = (
-        s["alpha_ratio"]
-        - 0.5 * s["punct_ratio"]
-        - 0.3 * s["digit_ratio"]
-        - 0.2 * s["upper_ratio"]
-    )
-    return F.greatest(F.least(F.round(score, 6), F.lit(1.0)), F.lit(0.0))
-
-
 # Tiny per-language stopword seeds for n-gram/stopword language ID.
 # Deterministic and oracle-expressible; a production detector would use
 # character n-gram profiles, same plumbing.
@@ -77,10 +63,6 @@ def stopword_hits_from_tokens(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda w: w.isin(*LANG_STOPWORDS[lang])))
 
 
-def stopword_hits(text: Column, lang: str) -> Column:
-    return stopword_hits_from_tokens(tokens(F.lower(text)), lang)
-
-
 def argmax_lang(scores: dict[str, Column]) -> Column:
     """argmax language over MATERIALIZED score columns, ties broken by
     fixed lang order (en,es,fr,de,zh); zero hits → 'und'. Callers on
@@ -94,11 +76,6 @@ def argmax_lang(scores: dict[str, Column]) -> Column:
         best_lang = F.when(cond, F.lit(lang)).otherwise(best_lang)
         best_score = F.when(cond, scores[lang]).otherwise(best_score)
     return best_lang
-
-
-def predict_lang(text: Column) -> Column:
-    """Convenience composition for small inputs/tests."""
-    return argmax_lang({lang: stopword_hits(text, lang) for lang in LANG_STOPWORDS})
 
 
 def normalized_text(text: Column) -> Column:
@@ -124,9 +101,3 @@ def ngrams_from_tokens(toks: Column, n: int) -> Column:
         idx,
         lambda i: F.concat_ws(" ", *[F.get(toks, i + j) for j in range(n)]),
     )
-
-
-def word_ngrams(text: Column, n: int) -> Column:
-    """Convenience wrapper for small inputs/tests; hot paths should
-    materialize tokens once and use ngrams_from_tokens."""
-    return ngrams_from_tokens(tokens(F.lower(text)), n)

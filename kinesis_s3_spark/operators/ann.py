@@ -1401,8 +1401,12 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "c_trunc",
     )
+    # approx holds |queries| x TOP_K rows by construction: broadcast it at
+    # plan time. Left to AQE, the join became a broadcast only after the
+    # window stages finished, and whichever finished first decided
+    # whether the join's own shuffles ran too (2 or 4 shuffle stages).
     hits = truth.join(
-        approx.withColumnRenamed("vec_id", "a_vec"),
+        F.broadcast(approx.withColumnRenamed("vec_id", "a_vec")),
         (truth["q_id"] == approx["q_id"]) & (truth["vec_id"] == F.col("a_vec")),
         "left",
     ).select(truth["q_id"], F.col("a_vec"))

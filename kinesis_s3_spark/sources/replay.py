@@ -50,7 +50,6 @@ file-source stream.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -315,9 +314,3 @@ def register_replay_source(spark) -> None:
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(ArchiveReplayDataSource)
-
-
-def replay_offsets_snapshot(root: str) -> str:
-    """Debug helper: the offset json the reader would report now."""
-    ids = _list_batch_ids(root)
-    return json.dumps({"batch_id": ids[-1] if ids else -1})

@@ -121,7 +121,6 @@ def run_loader(
     query_name: str = "kinesis-s3-loader",
     tracker: SnowplowTracker | None = None,
     dedupe_watermark: str | None = None,
-    countmin=None,
     accumulators=(),
 ) -> StreamingQuery:
     """Wire source → trigger → foreachBatch(emit) → checkpoint and
@@ -141,16 +140,13 @@ def run_loader(
     the streaming twin of dedup_incremental; the state survives query
     restarts through the checkpoint.
 
-    ``countmin``: a streaming/cms.py:CountMinAccumulator; when set,
-    each emitted micro-batch's payload words are folded into the
-    persisted Count-Min matrix after the flush (replay-safe: the
-    accumulator skips re-delivered batch ids, and its state file
-    reloads on restart).
-
-    ``accumulators``: any further objects with the same
-    ``update(batch_df, batch_id)`` replay-safe contract (e.g.
-    streaming/histogram.py:SizeHistogramAccumulator), applied in
-    order after countmin."""
+    ``accumulators``: objects with a replay-safe
+    ``update(batch_df, batch_id)`` (e.g. streaming/cms.py:
+    CountMinAccumulator, which folds each emitted micro-batch's payload
+    words into a persisted Count-Min matrix, or
+    streaming/histogram.py:SizeHistogramAccumulator), applied in order
+    after the flush. Replay-safe means an accumulator skips re-delivered
+    batch ids and reloads its state file on restart."""
     # output.s3.customEndpoint → s3a endpoint conf, applied before the
     # sink writes its first object (the buildS3Client analogue)
     hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -193,8 +189,6 @@ def run_loader(
             bad_sink=bad_sink,
             run_id=run_meta.run_id if run_meta else None,
         )
-        if countmin is not None:
-            countmin.update(batch_df, batch_id)
         for acc in accumulators:
             acc.update(batch_df, batch_id)
         if on_flush is not None:

@@ -224,10 +224,8 @@ class LoaderListener(L.StreamingQueryListener):
     def __init__(self, statsd: StatsDClient | None = None, tracker=None) -> None:
         self.statsd = statsd
         self.tracker = tracker  # callable(event_name: str, payload: dict)
-        self.events: list[tuple[str, dict]] = []  # in-memory trail for tests
 
     def _track(self, name: str, payload: dict) -> None:
-        self.events.append((name, payload))
         if self.tracker is not None:
             try:
                 self.tracker(name, payload)

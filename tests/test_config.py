@@ -153,6 +153,7 @@ def test_cli_countmin_flag_builds_accumulator(tmp_path, monkeypatch):
         ["--config", str(cfgp), "--countmin-state", str(state), "--dedupe-watermark", "2 hours"]
     )
     assert rc == 0
-    assert isinstance(seen["countmin"], CountMinAccumulator)
-    assert seen["countmin"]._path.startswith(str(state))
+    (cms,) = seen["accumulators"]
+    assert isinstance(cms, CountMinAccumulator)
+    assert cms._path.startswith(str(state))
     assert seen["dedupe_watermark"] == "2 hours"

@@ -230,19 +230,18 @@ def test_bad_row_archive_scan_is_text_with_partition_column(spark):
 
 
 def test_exchange_budget_catches_lost_broadcast(spark):
-    """The plan audit's exchange-budget check (tools/plan_audit.py)
-    must turn RED when a broadcast silently degrades to a shuffle
-    join: disable auto-broadcast, rebuild a dim-join query's plan, and
-    the extra shuffle exchanges must exceed the committed budget."""
-    from tools.plan_audit import flag_row, load_budgets, plan_counts
+    """The plan audit's budget check (tools/plan_audit.py) must turn RED
+    when a broadcast silently degrades to a shuffle join: disable
+    auto-broadcast, rerun a dim-join query, and the extra executed
+    shuffle stages must exceed the committed budget."""
+    from tools.plan_audit import flag_row, load_budgets, plan_counts, run_counted
 
     budgets = load_budgets()
     name = "q5_region_revenue"
-    assert name in budgets  # the baseline file covers the registry
 
     def counts():
-        plan = Q[name](spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-        return plan_counts(name, plan)
+        spark.catalog.clearCache()
+        return plan_counts(name, *run_counted(spark, lambda: Q[name](spark, SF_SMOKE)))
 
     healthy = counts()
     assert flag_row(healthy, budgets) == []
@@ -253,8 +252,17 @@ def test_exchange_budget_catches_lost_broadcast(spark):
         degraded = counts()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert degraded["exchanges"] > healthy["exchanges"]
+    assert degraded["shuffle_stages"] > healthy["shuffle_stages"]
     assert any(f.startswith("EXCHANGE_REGRESSION") for f in flag_row(degraded, budgets))
+
+
+def test_budgets_cover_the_registry():
+    """Exactly one budget line per registered query: a missing line or
+    a stale one (renamed/removed query) fails here, not only in the full
+    audit sweep."""
+    from tools.plan_audit import load_budgets
+
+    assert set(load_budgets()) == set(entrymod.queries())
 
 
 def test_budget_file_flags_unknown_query(spark):
@@ -263,8 +271,28 @@ def test_budget_file_flags_unknown_query(spark):
     from tools.plan_audit import flag_row
 
     row = {"query": "brand_new_op", "cartesian": 0, "nested_loop": 0,
-           "row_python": 0, "arrow_python": 0, "exchanges": 1}
+           "row_python": 0, "arrow_python": 0, "shuffle_stages": 1}
     assert "NO_EXCHANGE_BUDGET" in flag_row(row, {})
+
+
+def test_shuffle_stage_count_sees_construction_time_work(spark):
+    """Work a query runs while it is BUILT is counted, not just its
+    final plan: an eager localCheckpoint of a repartition executes one
+    shuffle before the aggregate's own, yet the final plan text starts
+    from the checkpointed RDD and mentions a single Exchange (the blind
+    spot that hid every label-propagation round from a plan-text
+    count)."""
+    from kinesis_s3_spark.sources.tables import load_table
+    from tools.plan_audit import run_counted
+
+    def build():
+        li = load_table(spark, SF_SMOKE, "lineitem")
+        part = li.repartition(4, "l_orderkey").localCheckpoint()
+        return part.groupBy("l_returnflag").count()
+
+    plan, shuffle_stages = run_counted(spark, build)
+    assert plan.count("Exchange") == 1, plan
+    assert shuffle_stages >= 2
 
 
 def test_runtime_bloom_filter_injects_on_selective_join(spark):
@@ -328,7 +356,8 @@ def test_sp_window_flag_catches_unpartitioned_global_rank(spark):
     li = load_table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_extendedprice")
 
     def counts(df, name="probe"):
-        return plan_counts(name, df._jdf.queryExecution().executedPlan().toString())
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan_counts(name, plan, shuffle_stages=0)
 
     # (1) injected defect: unlimited global rank → flagged
     bad = li.withColumn(
@@ -365,4 +394,5 @@ def test_sp_window_allowlist_is_bounded(spark):
         "sketch_quantile_histogram",
     ):
         plan = Q[name](spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-        assert plan_counts(name, plan)["sp_window"] <= ALLOW_SP_WINDOW.get(name, 0), name
+        row = plan_counts(name, plan, shuffle_stages=0)
+        assert row["sp_window"] <= ALLOW_SP_WINDOW.get(name, 0), name

@@ -222,7 +222,7 @@ def test_streaming_countmin_matches_batch_sketch(spark, tmp_path):
     # run 1: first slice of the corpus
     write_input(part1)
     cms = CountMinAccumulator(cms_dir)
-    q = run_loader(spark, cfg, query_name="cms-a", countmin=cms)
+    q = run_loader(spark, cfg, query_name="cms-a", accumulators=(cms,))
     q.processAllAvailable()
     q.stop()
 
@@ -231,7 +231,7 @@ def test_streaming_countmin_matches_batch_sketch(spark, tmp_path):
     write_input(part2)
     cms2 = CountMinAccumulator(cms_dir)
     assert cms2.cells == cms.cells  # state survived the restart
-    q2 = run_loader(spark, cfg, query_name="cms-b", countmin=cms2)
+    q2 = run_loader(spark, cfg, query_name="cms-b", accumulators=(cms2,))
     q2.processAllAvailable()
     q2.stop()
 

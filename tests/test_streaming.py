@@ -111,7 +111,8 @@ def test_listener_and_statsd(spark, tmp_path):
             statsd_tags={"app": "t"},
         )
     )
-    listener = LoaderListener(statsd=statsd)
+    events: list[tuple[str, dict]] = []
+    listener = LoaderListener(statsd=statsd, tracker=lambda n, p: events.append((n, p)))
     spark.streams.addListener(listener)
 
     inp = str(tmp_path / "in")
@@ -137,13 +138,13 @@ def test_listener_and_statsd(spark, tmp_path):
         q.stop()
         deadline = time.time() + 10
         while time.time() < deadline and not any(
-            n == "app_shutdown" for n, _ in listener.events
+            n == "app_shutdown" for n, _ in events
         ):
             time.sleep(0.2)
     finally:
         spark.streams.removeListener(listener)
 
-    names = [n for n, _ in listener.events]
+    names = [n for n, _ in events]
     assert "app_initialized" in names
     assert "app_shutdown" in names
 

@@ -1,14 +1,20 @@
-"""Registry-wide physical-plan audit: every queries() entry is built
-at sf0.001 and its executed plan scanned for scale red flags:
+"""Registry-wide plan audit: every queries() entry is built and run at
+sf0.001, and the audit checks it for scale red flags:
 
 - CartesianProduct / BroadcastNestedLoopJoin with non-broadcast-tiny
   inputs (quadratic blow-up),
 - BatchEvalPython (row-at-a-time Python UDF — the forbidden slow path;
   ArrowEvalPython / MapInPandas are the allowed vectorized forms),
-- exchange-count REGRESSIONS against the committed per-query budget
+- SHUFFLE-STAGE REGRESSIONS against the committed per-query budget
   (tools/plan_budgets.json): a silently lost broadcast or a new
   shuffle turns the audit red instead of passing unnoticed
-  (VERDICT r4 'what's wrong' #3),
+  (VERDICT r4 'what's wrong' #3). The count is of EXECUTED work, not
+  of plan text: the query's construction and a noop write of its
+  result run under one fresh job group, and every stage of that group
+  that ran (not skipped) and wrote shuffle output counts.
+  Construction-time jobs (driver collects, eager localCheckpoints,
+  per-round iterations) are therefore counted, where the final plan
+  string would show only the last round,
 - SINGLE-PARTITION WINDOWS (VERDICT r6 'what's wrong' #1): a
   Window whose child is Sort over Exchange SinglePartition moves the
   window's whole input through ONE executor core. Top-k-filtered
@@ -18,6 +24,9 @@ at sf0.001 and its executed plan scanned for scale red flags:
   operators/ranking.global_row_number / global_prefix_sum instead.
   Bounded-by-construction frames (<= nbuckets/k/|bins| rows) are
   allowlisted per query with the justification at the definition.
+
+The cartesian, row-Python and window checks read the physical plan
+string; only the budget check reads executed stages.
 
 tests/test_plans.py asserts the named contracts per-run (including a
 lost-broadcast injection proving the budget check fires); this tool is
@@ -36,6 +45,7 @@ import json
 import os
 import re
 import sys
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -111,28 +121,18 @@ ALLOW_NESTED_LOOP = {
 }
 
 
-# Iterative operators build their result across a convergence-dependent
-# number of rounds; the captured plan string embeds every round's
-# subtree, and Spark's exchange-reuse decisions inside those subtrees
-# vary slightly run to run. A small explicit slack keeps the audit
-# stable without hiding a real lost-broadcast (which costs exchanges on
-# EVERY round, far beyond the slack).
+# Queries whose executed shuffle-stage count varies between runs of
+# identical code, with the slack that covers the observed range.
 EXCHANGE_SLACK = {
-    "dedup_cluster_resolve": 8,  # label propagation, ~5 rounds embedded
-    # the full pipeline embeds the label-propagation rounds inside a
-    # larger DAG (~2300 Exchange occurrences in the captured string);
-    # reuse decisions inside that many repeated subtrees drift a few
-    # percent run to run — slack well below one extra round's cost
-    "curation_dedup_pipeline": 96,
+    # read 4, 5 or 6: at sf0.001 both k-th-value frames are empty, and AQE
+    # prunes a cross join's other branches as soon as one empty side
+    # materializes, so the count depends on which stage finishes first
+    "sketch_kmv_union": 2,
+    # read 6 or 7: AQE turns one of the final fate joins into a broadcast
+    # at run time, and whether the other side's shuffle had already been
+    # submitted depends on which sibling stage finished first
+    "curation_dedup_pipeline": 1,
 }
-
-# NOTE on budget provenance: budgets are IN-SESSION measurements
-# (--write-budgets runs the whole registry in one session), so plans
-# that pick up another query's cached frame as an InMemoryRelation
-# subtree (e.g. graph_triangles re-reading pagerank's cached
-# transition_edges: 20 in-session vs 10 standalone) are budgeted at
-# the in-session number — always re-baseline via --write-budgets, not
-# by measuring a query solo.
 
 
 def load_budgets() -> dict[str, int]:
@@ -163,24 +163,66 @@ ALLOW_SP_WINDOW = {
 }
 
 
-def plan_counts(name: str, plan: str) -> dict:
-    """Operator-occurrence counters over a physical plan string."""
+def plan_counts(name: str, plan: str, shuffle_stages: int) -> dict:
+    """Operator-occurrence counters over a physical plan string, plus
+    the query's executed shuffle-stage count (see run_counted)."""
     return {
         "query": name,
         "cartesian": plan.count("CartesianProduct"),
         "nested_loop": plan.count("BroadcastNestedLoopJoin"),
         "row_python": plan.count("BatchEvalPython"),
         "arrow_python": plan.count("ArrowEvalPython") + plan.count("MapInPandas"),
-        "exchanges": plan.count("Exchange"),
+        "shuffle_stages": shuffle_stages,
         "sp_window": len(SP_WINDOW_RE.findall(plan)),
     }
 
 
+def run_counted(spark, build) -> tuple[str, int]:
+    """Run ``build()`` (the query's construction, which may itself run
+    jobs) and a noop write of the frame it returns, all under one fresh
+    job group; return the frame's physical plan string and the number
+    of shuffle stages that group executed. A stage listed by a job but
+    skipped, or whose record the status store has already evicted
+    (spark.ui.retainedStages — only stages reused from an earlier call
+    are that old), did not run in this call."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    gid = f"plan-audit-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "plan audit")
+    try:
+        df = build()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    store = jsc.statusStore()
+    stage_ids: set[int] = set()
+    for jid in sc.statusTracker().getJobIdsForGroup(gid):
+        seq = store.job(jid).stageIds()
+        stage_ids.update(seq.apply(i) for i in range(seq.size()))
+    ran = 0
+    for sid in stage_ids:
+        try:
+            stage = store.lastStageAttempt(sid)
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getName() != "java.util.NoSuchElementException":
+                raise
+            continue
+        if stage.status().toString() != "SKIPPED" and stage.shuffleWriteBytes() > 0:
+            ran += 1
+    return plan, ran
+
+
 def flag_row(row: dict, budgets: dict[str, int]) -> list[str]:
-    """The audit policy for one query's counters. An exchange count
-    above the committed budget is a regression (e.g. a broadcast that
-    silently became a shuffle); a registered query with no budget line
-    is flagged so the baseline can't silently go stale."""
+    """The audit policy for one query's counters. An executed
+    shuffle-stage count above the committed budget is a regression
+    (e.g. a broadcast that silently became a shuffle); a registered
+    query with no budget line is flagged so the baseline can't silently
+    go stale."""
     name = row["query"]
     flags = []
     if row["row_python"]:
@@ -192,8 +234,8 @@ def flag_row(row: dict, budgets: dict[str, int]) -> list[str]:
     budget = budgets.get(name)
     if budget is None:
         flags.append("NO_EXCHANGE_BUDGET")
-    elif row["exchanges"] > budget + EXCHANGE_SLACK.get(name, 0):
-        flags.append(f"EXCHANGE_REGRESSION:{row['exchanges']}>{budget}")
+    elif row["shuffle_stages"] > budget + EXCHANGE_SLACK.get(name, 0):
+        flags.append(f"EXCHANGE_REGRESSION:{row['shuffle_stages']}>{budget}")
     return flags
 
 
@@ -219,12 +261,11 @@ def audit(write_budgets: bool = False) -> int:
             # budget should pin. A query's OWN caches (built during its
             # eager training collects) are unaffected.
             spark.catalog.clearCache()
-            plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+            row = plan_counts(name, *run_counted(spark, lambda: fn(spark, SF_DIR)))
         except Exception as e:  # guarded ops may refuse; not a plan defect
             print(json.dumps({"query": name, "skipped": str(e)[:80]}))
             continue
-        row = plan_counts(name, plan)
-        actual[name] = row["exchanges"]
+        actual[name] = row["shuffle_stages"]
         flags = [] if write_budgets else flag_row(row, budgets)
         if flags:
             row["flags"] = flags

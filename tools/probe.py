@@ -1,10 +1,8 @@
 """Isolated warm-probe protocol (SCALE.md): fresh SparkSession, one
 cold run, then N warm runs per query; report cold, warm median, and
-warm spread. This is the measurement the committed baselines
-(tools/bench_baseline.json) are pinned from — in-suite bench numbers
-carry GC/cache pressure from neighbours, so a ratchet flag is only
-actionable after an isolated probe reproduces it (VERDICT r6/r7
-root-causing showed 2-5x in-suite inflation on heavy queries).
+warm spread. In-suite bench numbers carry GC/cache pressure from
+neighbours (VERDICT r6/r7 root-causing showed 2-5x in-suite inflation
+on heavy queries), so a query's own time is read from an isolated probe.
 
 Usage:
   python tools/probe.py SF_DIR q1,q2,...        # 1 cold + 3 warm each
@@ -42,23 +40,6 @@ def probe(spark, fn, sf_dir: str, warm: int) -> dict:
     }
 
 
-def probe_loader(spark, sf_dir: str, warm: int) -> dict:
-    """Solo loader-throughput probe (VERDICT r10 next #2): the emit-path
-    rows/sec number, measured in this fresh session so the pin is
-    protocol-consistent with query pins. Each bench.loader_throughput
-    call already medians 3 emits; ``warm`` outer runs give a spread."""
-    import bench
-
-    runs = [bench.loader_throughput(spark, sf_dir)["rows_per_sec"] for _ in range(warm)]
-    return {
-        "cold": runs[0],
-        "median": statistics.median(runs),
-        "spread": max(runs) - min(runs),
-        "runs": runs,
-        "unit": "rows_per_sec",
-    }
-
-
 def main() -> None:
     sf_dir = sys.argv[1]
     names = sys.argv[2].split(",")
@@ -66,11 +47,7 @@ def main() -> None:
     spark = get_spark("probe")
     spark.sparkContext.setLogLevel("ERROR")
     q = entrymod.queries()
-    out = {
-        n: probe_loader(spark, sf_dir, warm) if n == "__loader__"
-        else probe(spark, q[n], sf_dir, warm)
-        for n in names
-    }
+    out = {n: probe(spark, q[n], sf_dir, warm) for n in names}
     print(json.dumps(out))
 
 

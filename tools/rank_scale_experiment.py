@@ -1,10 +1,9 @@
 """Crossover measurement for the distributed global-rank primitive.
 
-The r7 ratchet re-pin (tools/bench_baseline.json `repin_r7_rank`)
-records that operators/ranking.py costs a fixed few seconds MORE than
-the single-partition `Window.orderBy` it replaced at sf0.1/sf1 toy
-scale. This experiment makes the other side of that trade measurable
-instead of asserted: rank the SAME synthetic frame both ways at
+Round 7's bench showed that operators/ranking.py costs a fixed few
+seconds MORE than the single-partition `Window.orderBy` it replaced at
+sf0.1/sf1 toy scale. This experiment makes the other side of that
+trade measurable instead of asserted: rank the SAME synthetic frame both ways at
 growing row counts and report the crossover.
 
 Self-contained (spark.range — no testdata dependency), deterministic
