@@ -9,8 +9,8 @@ frame). Small here, but the PLAN is the one that scales: each
 iteration is edges ⋈ ranks (ranks broadcast — they are |V|-sized) →
 groupBy(dst) sum — the textbook distributed PageRank step, linear in
 |E| per round with a single uniform-key shuffle. Dangling-node mass
-is redistributed uniformly (the standard correction), computed as an
-anti-join scalar per round.
+is redistributed uniformly (the standard correction); it is summed in
+the same aggregate as the per-node sums (see graph_pagerank).
 
 Determinism (registry rules): per-edge contributions are rounded to
 14 dp and summed as DECIMAL(28,14) so addition order cannot move the
@@ -49,17 +49,23 @@ def _edges_sql() -> str:
 """
 
 
+def _transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst): every event's type and the type of the user's next
+    event, dst NULL on a user's last event. One (user_id) window pass."""
+    events = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return events.select(
+        F.col("event_type").alias("src"),
+        F.lead("event_type").over(w).alias("dst"),
+    )
+
+
 def transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst, n): per-user consecutive-event transitions weighted
     by count — the shared edge frame for all graph operators. One
     (user_id) window pass + one (src, dst) aggregate."""
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
-        events.select(
-            F.col("event_type").alias("src"),
-            F.lead("event_type").over(w).alias("dst"),
-        )
+        _transitions(spark, sf_dir)
         .filter(F.col("dst").isNotNull())
         .groupBy("src", "dst")
         .agg(F.count("*").cast("long").alias("n"))
@@ -115,71 +121,102 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle unrolls every iteration in one WITH chain —
     bit-exact per round via the module's rounding discipline.
 
-    Plan per iteration: ranks (|V| rows, broadcast) join the cached
-    edge frame, per-edge contributions aggregate on dst (uniform key,
-    map-side combined), plus an anti-join scalar for dangling mass.
-    100 TB: |E| scales with the corpus, each round stays one shuffle
-    on dst; ranks never exceed |V| — the exact shape GraphX/Pregel
-    lowers to.
+    The transition frame is built once and materialized with an eager
+    localCheckpoint. It holds three kinds of rows ``(src, dst,
+    dangling, w)``:
+    - one per edge, ``w = n / out_n`` of its source;
+    - one ``(v, v, false, 0.0)`` per node, so that every node is a
+      group of the round's aggregate, incoming edges or not;
+    - one ``(u, NULL, true, 1.0)`` per dangling node ``u`` (no outgoing
+      edge), so the dangling mass falls out of the same aggregate:
+      ``round(r * 1.0, 14) = round(r, 14)``, the oracle's term.
+    The DECIMAL(28,14) sums do not depend on row order, and a zero
+    contribution adds nothing, so every sum is the oracle's.
 
-    Lineage discipline: the rank vector is materialized per round via
-    an eager localCheckpoint (|V| rows — event types — so the
-    materialization is trivially cheap). Without it the lazily-built
-    plan replays the whole prior-round lineage for each of the three
-    places that consume `ranks` (dangling mass, contributions, next
-    vector), i.e. ~3^k copies of the base scan by round k — the audit
-    measured 166 exchanges / 22 nested loops for 3 rounds. With it,
-    each round is ONE job that is linear in |E|: exactly the
-    materialize-per-superstep contract GraphX/Pregel uses."""
-    events = load_table(spark, sf_dir, "events")
-    edges = transition_edges(spark, sf_dir).cache()
-    outw = edges.groupBy("src").agg(F.sum("n").cast("long").alias("out_n"))
-    nodes = events.select(F.col("event_type").alias("v")).distinct().cache()
-    nn = nodes.agg(F.count("*").cast("double").alias("n"))
-    dec = f"decimal(28,{_RDP})"
-    ranks = (
-        nodes.crossJoin(F.broadcast(nn))
-        .select("v", F.round(F.lit(1.0) / F.col("n"), _RDP).alias("r"))
+    Each round is one broadcast join of the rank vector into the
+    frame, one aggregate on ``(dst, dangling)`` and one eager
+    localCheckpoint: three jobs (broadcast, shuffle map, result). The
+    aggregate's |V|+1 rows are coalesced to one partition, where the
+    node count N and the dangling mass are window totals that need no
+    exchange; N stays in the plan, so an empty input yields an empty
+    result rather than a division by zero. The checkpoint cuts the
+    lineage per round, the materialize-per-superstep contract
+    GraphX/Pregel uses; without it, round k would re-plan all k-1
+    rounds before it. 100 TB: the edge frame scales with the corpus
+    and each round stays one map-side combined shuffle on dst;
+    node-sized frames never exceed |V|."""
+    # one row per (src, dst) pair, dst NULL included, so every node
+    # (every event type, NULL too) is some row's src
+    by_src = Window.partitionBy("src")
+    src, dst, n, out_n, first = map(F.col, ("src", "dst", "n", "out_n", "first"))
+    pairs = (
+        _transitions(spark, sf_dir)
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("n"))
+        .select(
+            "*",
+            F.sum(F.when(dst.isNotNull(), n)).over(by_src).alias("out_n"),
+            (F.row_number().over(by_src.orderBy("dst")) == 1).alias("first"),
+        )
+    )
+
+    def row(to, dang: bool, w):
+        return F.struct(
+            src.alias("src"),
+            to.alias("dst"),
+            F.lit(dang).alias("dangling"),
+            w.alias("w"),
+        )
+
+    # the oracle joins on src = v: a NULL node sends nothing along its
+    # edges and counts as dangling
+    kinds = F.array(
+        F.when(
+            src.isNotNull() & dst.isNotNull(),
+            row(dst, False, n.cast("double") / out_n.cast("double")),
+        ),
+        F.when(first, row(src, False, F.lit(0.0))),
+        F.when(
+            first & (src.isNull() | out_n.isNull()),
+            row(F.lit(None).cast("string"), True, F.lit(1.0)),
+        ),
+    )
+    trans = (
+        pairs.select(F.explode(F.filter(kinds, lambda k: k.isNotNull())).alias("t"))
+        .select("t.*")
         .localCheckpoint(eager=True)
     )
+
+    every = Window.partitionBy()  # over one partition of |V| + 1 rows
+    dangling = F.col("dangling")
+    nodes_n = F.count(F.when(~dangling, 1)).over(every).cast("double")
+    dang_s = F.coalesce(F.max(F.when(dangling, F.col("s"))).over(every), F.lit(0.0))
+    dec = f"decimal(28,{_RDP})"
+    ranks = (
+        trans.filter(F.col("w") == 0.0)  # the node rows
+        .coalesce(1)
+        .select(
+            F.col("src").alias("v"),
+            F.round(F.lit(1.0) / F.count("*").over(every).cast("double"), _RDP).alias("r"),
+        )
+    )
     for _ in range(PR_ITERS):
-        dang = (
-            ranks.join(outw, ranks.v == outw.src, "left_anti")
+        ranks = (
+            trans.join(F.broadcast(ranks), trans.src.eqNullSafe(ranks.v))
+            .groupBy("dst", "dangling")
             .agg(
-                F.coalesce(
-                    F.sum(F.round(F.col("r"), _RDP).cast(dec)), F.lit(0).cast(dec)
-                )
+                F.sum(F.round(F.col("r") * F.col("w"), _RDP).cast(dec))
                 .cast("double")
                 .alias("s")
             )
-        )
-        inc = (
-            edges.join(F.broadcast(ranks.withColumnRenamed("v", "src")), "src")
-            .join(outw, "src")
+            .coalesce(1)
+            .select("dst", "dangling", "s", nodes_n.alias("nn"), dang_s.alias("dang_s"))
+            .filter(~dangling)
             .select(
                 F.col("dst").alias("v"),
                 F.round(
-                    F.col("r")
-                    * (F.col("n").cast("double") / F.col("out_n").cast("double")),
-                    _RDP,
-                ).cast(dec).alias("c"),
-            )
-            .groupBy("v")
-            .agg(F.sum("c").cast("double").alias("s"))
-        )
-        ranks = (
-            nodes.crossJoin(F.broadcast(nn))
-            .crossJoin(F.broadcast(dang.withColumnRenamed("s", "dang_s")))
-            .join(F.broadcast(inc), "v", "left")
-            .select(
-                "v",
-                F.round(
-                    F.lit((1.0 - PR_DAMPING)) / F.col("n")
-                    + F.lit(PR_DAMPING)
-                    * (
-                        F.coalesce(F.col("s"), F.lit(0.0))
-                        + F.col("dang_s") / F.col("n")
-                    ),
+                    F.lit((1.0 - PR_DAMPING)) / F.col("nn")
+                    + F.lit(PR_DAMPING) * (F.col("s") + F.col("dang_s") / F.col("nn")),
                     _RDP,
                 ).alias("r"),
             )

@@ -1,16 +1,21 @@
-"""Graph operator tests: PageRank invariants and triangle counts
+"""Graph operator tests: PageRank invariants, PageRank against its
+DuckDB oracle on rewritten and degenerate inputs, and triangle counts
 cross-checked against a driver-side brute force on the same edges."""
 
 from __future__ import annotations
 
 from itertools import combinations
 
+import duckdb
+import pytest
+
 import __spark_entry__ as entrymod
 
 from kinesis_s3_spark.operators.graph import transition_edges
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 Q = entrymod.queries()
+ORACLES = entrymod.oracle_sql()
 
 
 def test_pagerank_is_a_distribution(spark):
@@ -44,3 +49,54 @@ def test_triangles_match_bruteforce(spark):
     }
     for v in nodes:
         assert got.get(v, 0) == expected[v], (v, got.get(v), expected[v])
+
+
+def _events(tmp_path, sql: str) -> str:
+    """Writes ``sql`` over the sf0.001 events (a view named ``src``) as
+    ``tmp_path/events.parquet``; returns the directory."""
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW src AS SELECT * FROM '{SF_SMOKE}/events.parquet'")
+    con.execute(f"COPY ({sql}) TO '{tmp_path}/events.parquet' (FORMAT parquet)")
+    return str(tmp_path)
+
+
+def _assert_pagerank_is_oracle(spark, sf_dir: str) -> list:
+    """Bit-exact, order-insensitive; returns the Spark rows."""
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+    want = con.sql(ORACLES["graph_pagerank"]).fetchall()
+    rows = Q["graph_pagerank"](spark, sf_dir).collect()
+    assert sorted(map(tuple, rows), key=repr) == sorted(want, key=repr)
+    return rows
+
+
+def test_pagerank_sees_a_rewritten_input(spark, tmp_path):
+    """A second run in the same session after the events file is
+    rewritten must rank the new graph, not a cached copy of the old."""
+    d = _events(tmp_path, "SELECT * FROM src")
+    assert len(_assert_pagerank_is_oracle(spark, d)) == 5
+    _events(tmp_path, "SELECT * FROM src WHERE event_type <> 'error'")
+    rows = _assert_pagerank_is_oracle(spark, d)
+    assert sorted(r["event_type"] for r in rows) == ["click", "purchase", "signup", "view"]
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT * FROM src WHERE false",
+        "SELECT * REPLACE (CASE WHEN event_id % 7 = 0 THEN NULL ELSE event_type END AS event_type) FROM src",
+        # 'error' only as a user's last event: a node with no outgoing edge
+        "SELECT * EXCLUDE (k) FROM (SELECT *, row_number() OVER ("
+        "PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS k FROM src) "
+        "WHERE event_type <> 'error' OR k = 1",
+    ],
+    ids=["empty", "null_types", "dangling"],
+)
+def test_pagerank_matches_oracle_on_edge_inputs(spark, tmp_path, sql):
+    _assert_pagerank_is_oracle(spark, _events(tmp_path, sql))
+
+
+def test_pagerank_of_a_single_event_type_is_one(spark, tmp_path):
+    d = _events(tmp_path, "SELECT * REPLACE ('view' AS event_type) FROM src")
+    rows = _assert_pagerank_is_oracle(spark, d)
+    assert [(r["event_type"], r["pagerank"], r["rank"]) for r in rows] == [("view", 1.0, 1)]

@@ -83,7 +83,6 @@ ALLOW_NESTED_LOOP = {
     "text_bm25_search",  # 1-row corpus stats (N, avgdl) broadcast (search.py:136)
     "search_hybrid_rrf",  # inherits both arms' 1-row broadcasts (search.py)
     "sketch_kmv_union",  # 1-row kth-value scalars crossed for the gate (sketches.py:371)
-    "graph_pagerank",  # 1-row |V| / dangling-mass scalars crossed per round (graph.py)
     "curation_dsir_weights",  # 1-row corpus totals broadcast (dsir.py)
     "curation_ccnet_buckets",  # 1-row token-total broadcast (surprisal pipeline)
     "events_drift_chi2",  # 1-row marginals / |types|-row total broadcasts
