@@ -452,7 +452,7 @@ def etl_indexed_gzip_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from kinesis_s3_spark.sinks.indexed_gzip import (
-        read_index,
+        split_ranges,
         write_indexed_gzip_grouped,
     )
 
@@ -484,13 +484,11 @@ def etl_indexed_gzip_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
         grp = grp_dir.split("=", 1)[1]
         d = os.path.join(out, grp_dir)
         for fname in sorted(os.listdir(d)):
-            if not fname.endswith(".index"):
+            if not fname.endswith(".gz"):
                 continue
-            gz = os.path.join(d, fname[: -len(".index")])
-            points, _n, total_bytes = read_index(os.path.join(d, fname))
-            for i, (_recs, off) in enumerate(points):
-                end = points[i + 1][1] if i + 1 < len(points) else total_bytes
-                ranges.append((grp, gz, off, end))
+            gz = os.path.join(d, fname)
+            for start, end in split_ranges(gz + ".index", 0):
+                ranges.append((grp, gz, start, end))
     rdf = spark.createDataFrame(
         ranges, "grp string, path string, start long, stop long"
     )

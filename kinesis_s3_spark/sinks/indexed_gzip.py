@@ -28,8 +28,13 @@ which carries no name/extra fields) — i.e. at the first byte-aligned
 resumable position.
 
 Everything here is task-side, stream-once, O(1) memory per writer:
-the Spark integration (write_indexed_gzip) walks each partition
-iterator exactly once and keeps only compressor state.
+the Spark integration (write_indexed_gzip_grouped) walks each
+partition iterator exactly once and keeps only compressor state.
+
+This module is the one owner of the format: every reader of a
+``.index`` sidecar (the archive-replay source, the
+``etl_indexed_gzip_splits`` query) goes through ``read_index``,
+``split_ranges`` and ``read_split``.
 """
 
 from __future__ import annotations
@@ -43,10 +48,11 @@ from pyspark import cloudpickle
 
 DEFAULT_SYNC_EVERY = 100
 
-# The Spark sinks below run this module's writers inside Python workers.
-# Pickled by reference, those would need ``kinesis_s3_spark`` importable
-# on every worker (PYTHONPATH, the driver's working directory or
-# addPyFile); pickled by value, the module only needs the standard
+# The Spark sinks below run this module's writers inside Python workers,
+# and the archive-replay source (sources/replay.py) runs its readers
+# there. Pickled by reference, those would need ``kinesis_s3_spark``
+# importable on every worker (PYTHONPATH, the driver's working directory
+# or addPyFile); pickled by value, the module only needs the standard
 # library there.
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -121,7 +127,28 @@ def read_index(path: str) -> tuple[list[tuple[int, int]], int, int]:
                 points.append((int(parts[0]), int(parts[1])))
     if total_records < 0:
         raise ValueError(f"{path}: missing 'total' line (truncated index?)")
+    if not points:
+        # a range starting at byte 0 would include the gzip member header,
+        # which the raw-deflate reader cannot parse: an index with no sync
+        # points is corrupt, not "one big split"
+        raise ValueError(f"{path}: no sync-point offsets (corrupt index?)")
     return points, total_records, total_bytes
+
+
+def split_ranges(index_path: str, target_bytes: int) -> list[tuple[int, int]]:
+    """Chop the sync points of ``index_path`` into contiguous
+    ``[start, end)`` compressed-byte ranges of at least ``target_bytes``
+    each (the last takes the tail). A target of 0 yields one range per
+    sync point. Each range is a ``read_split`` argument pair."""
+    points, _n, total_bytes = read_index(index_path)
+    ranges: list[tuple[int, int]] = []
+    start = points[0][1]
+    for _recs, off in points[1:]:
+        if off - start >= target_bytes:
+            ranges.append((start, off))
+            start = off
+    ranges.append((start, total_bytes))
+    return ranges
 
 
 def read_split(gz_path: str, start_offset: int, end_offset: int | None) -> list[str]:
@@ -151,37 +178,10 @@ def read_all_via_splits(gz_path: str) -> list[str]:
     """Reassemble the whole file purely from independent split reads —
     the downstream-parallelism contract, verifiable: each split is
     decoded with no state from any other."""
-    points, _n, total_bytes = read_index(gz_path + ".index")
     out: list[str] = []
-    for i, (_recs, off) in enumerate(points):
-        end = points[i + 1][1] if i + 1 < len(points) else total_bytes
-        out.extend(read_split(gz_path, off, end))
+    for start, end in split_ranges(gz_path + ".index", 0):
+        out.extend(read_split(gz_path, start, end))
     return out
-
-
-def write_indexed_gzip(
-    df,
-    out_dir: str,
-    sync_every: int = DEFAULT_SYNC_EVERY,
-    value_col: str = "value",
-) -> None:
-    """Spark sink: one indexed gzip file per partition of ``df``
-    (``part-<pid>.txt.gz`` + ``.index``), written task-side with O(1)
-    memory. Callers control parallelism/file count via the frame's
-    partitioning (same knob as the emitter's writer fan-out) and
-    replay idempotence by clearing ``out_dir`` first (the emitter's
-    per-batch overwrite contract)."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def _write(pid: int, rows: Iterator) -> Iterator[tuple[int, int]]:
-        path = os.path.join(out_dir, f"part-{pid:05d}.txt.gz")
-        n = write_indexed_file(path, (r[value_col] for r in rows), sync_every)
-        yield (pid, n)
-
-    # rdd-level foreach keeps this a pure sink stage (no shuffle, no
-    # plan beyond the scan); the tiny (pid, count) results force
-    # execution and surface task errors
-    df.select(value_col).rdd.mapPartitionsWithIndex(_write).count()
 
 
 class _RollingGroupWriter:

@@ -59,12 +59,13 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-# sinks.emitter.NO_SUBTYPE, duplicated (tests pin the equality): this
-# module must not reference other kinesis_s3_spark modules — it is
-# cloudpickled BY VALUE into Python data-source workers (see
-# register_replay_source), and a cross-module import would drag a
-# by-reference dependency back in, breaking any driver whose workers
-# don't have the package on sys.path.
+from kinesis_s3_spark.sinks.indexed_gzip import read_split, split_ranges
+
+# sinks.emitter.NO_SUBTYPE, duplicated (tests pin the equality). This
+# module is cloudpickled BY VALUE into Python data-source workers (see
+# register_replay_source), so it may only import modules that the
+# workers have or that are pickled by value too. sinks/indexed_gzip.py
+# registers itself for by-value pickling; the emitter does not.
 NO_SUBTYPE = "-"
 
 REPLAY_SCHEMA = "value string, batch_id bigint, row_type string"
@@ -87,46 +88,6 @@ class _GzPartition(InputPartition):
 # sidecar — the Hadoop-input-split shape: a handful of fat ranges per
 # object, not one task per 100-record sync block
 DEFAULT_SPLIT_TARGET_BYTES = 32 * 1024 * 1024
-
-
-def _read_index_points(index_path: str) -> tuple[list[int], int]:
-    """Sync-point byte offsets + total compressed bytes from a
-    ``.index`` sidecar. Behavior-pinned to
-    sinks/indexed_gzip.py:read_index (tests assert equality) but
-    inlined: this module must stay import-free for by-value worker
-    pickling (see register_replay_source)."""
-    offsets: list[int] = []
-    total_bytes = -1
-    with open(index_path) as fh:
-        for line in fh:
-            parts = line.rstrip("\n").split("\t")
-            if parts[0] == "total":
-                total_bytes = int(parts[2])
-            else:
-                offsets.append(int(parts[1]))
-    if total_bytes < 0:
-        raise ValueError(f"{index_path}: missing 'total' line (truncated index?)")
-    if not offsets:
-        # a range starting at byte 0 would include the gzip member header,
-        # which the raw-deflate (-15) reader cannot parse — an index with
-        # no sync points is corrupt, not "one big split"
-        raise ValueError(f"{index_path}: no sync-point offsets (corrupt index?)")
-    return offsets, total_bytes
-
-
-def _split_ranges(
-    offsets: list[int], total_bytes: int, target: int
-) -> list[tuple[int, int]]:
-    """Chop ascending sync offsets into contiguous [start, end) ranges
-    of >= ``target`` compressed bytes each (the last takes the tail)."""
-    ranges: list[tuple[int, int]] = []
-    start = offsets[0]
-    for off in offsets[1:]:
-        if off - start >= target:
-            ranges.append((start, off))
-            start = off
-    ranges.append((start, total_bytes))
-    return ranges
 
 
 def _list_batch_ids(root: str) -> list[int]:
@@ -186,10 +147,7 @@ def _plan_batch(
                 path = os.path.join(leaf, f)
                 index = path + ".index"
                 if os.path.exists(index):
-                    offsets, total = _read_index_points(index)
-                    for start, end in _split_ranges(
-                        offsets, total, split_target_bytes
-                    ):
+                    for start, end in split_ranges(index, split_target_bytes):
                         parts.append(
                             _GzPartition(path, batch_id, row_type, start, end)
                         )
@@ -250,22 +208,9 @@ class ArchiveReplayStreamReader(DataSourceStreamReader):
         if not partition.path:
             return
         if partition.start >= 0:
-            # indexed mid-file range: every sync offset is a
-            # byte-aligned full-flush record boundary, so the raw
-            # deflate bytes in [start, end) decode to exactly that
-            # range's records with no state from any other range
-            # (behavior-pinned to sinks/indexed_gzip.py:read_split)
-            import zlib
-
-            with open(partition.path, "rb") as fh:
-                fh.seek(partition.start)
-                raw = fh.read(partition.end - partition.start)
-            d = zlib.decompressobj(-15)
-            out = d.decompress(raw)
-            if not d.eof:
-                out += d.flush()
-            text = out.decode("utf-8")
-            for line in text.split("\n")[:-1] if text else []:
+            # indexed mid-file range: decodes with no state from any
+            # other range of the object
+            for line in read_split(partition.path, partition.start, partition.end):
                 yield (line, partition.batch_id, partition.row_type)
             return
         import gzip
@@ -307,7 +252,10 @@ def register_replay_source(spark) -> None:
     necessarily this package on sys.path (``addPyFile`` does not reach
     the streaming source-planner worker — verified empirically). With
     by-value pickling the class definition travels inside the pickle
-    itself and the workers need no import."""
+    itself and the workers need no import; the indexed-gzip readers it
+    calls travel the same way (sinks/indexed_gzip.py registers itself).
+    tests/test_replay_source.py replays a split tree from outside the
+    repository root to hold this."""
     import sys
 
     from pyspark import cloudpickle

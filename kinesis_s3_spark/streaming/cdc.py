@@ -16,11 +16,11 @@ executor.run analogue): per micro-batch it
    MERGE semantics — tombstone rows (event_type = 'error') DELETE,
    matched keys UPDATE, unmatched non-tombstones INSERT;
 3. rewrites the snapshot under a batch-id-versioned directory and
-   atomically flips a meta pointer (os.replace) — the same
-   deterministic-overwrite idempotence the emitter's RunMeta replay
-   protocol proves: a re-delivered batch id is skipped outright, and
-   a crash between snapshot write and pointer flip re-runs into the
-   SAME versioned path with mode=overwrite, so replays are bit-stable;
+   commits its name to the replay-state file
+   (streaming/replay_state.py): a re-delivered batch id is skipped
+   outright, and a crash between snapshot write and commit re-runs
+   into the SAME versioned path with mode=overwrite, so replays are
+   bit-stable;
 4. (SCD2 arm) appends the superseded versions — updated or deleted
    keys' prior rows, stamped with the closing batch id — into a
    batch-id-partitioned history directory, written with per-partition
@@ -37,11 +37,12 @@ part that carries to a real table format unchanged).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kinesis_s3_spark.streaming.replay_state import ReplayState
 
 TOMBSTONE = "error"  # etl_cdc_merge's delete marker (operators/etl.py)
 
@@ -56,16 +57,13 @@ class CdcMergeSink:
     payload = (event_type, value) — the etl_cdc_merge columns."""
 
     def __init__(self, table_dir: str) -> None:
-        os.makedirs(table_dir, exist_ok=True)
+        self._state = ReplayState(table_dir, _META)
         self.table_dir = table_dir
-        self._meta_path = os.path.join(table_dir, _META)
-        self.last_batch_id = -1
-        self._snapshot: str | None = None
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as fh:
-                meta = json.load(fh)
-            self.last_batch_id = meta["last_batch_id"]
-            self._snapshot = meta["snapshot"]
+        self._snapshot: str | None = self._state.loaded.get("snapshot")
+
+    @property
+    def last_batch_id(self) -> int:
+        return self._state.last_batch_id
 
     # -- reads ---------------------------------------------------------
 
@@ -92,11 +90,10 @@ class CdcMergeSink:
     # -- the foreachBatch hook ------------------------------------------
 
     def apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        """MERGE one micro-batch of change rows into the table.
-        Replay-safe: ids at or below the last applied batch are
-        re-deliveries and skip; a partially-applied batch re-runs into
-        the same versioned paths deterministically."""
-        if batch_id <= self.last_batch_id:
+        """MERGE one micro-batch of change rows into the table. A
+        partially-applied batch re-runs into the same versioned paths
+        deterministically."""
+        if self._state.seen(batch_id):
             return
         spark = batch_df.sparkSession
         key = F.struct("ts", "event_id")
@@ -126,11 +123,7 @@ class CdcMergeSink:
         superseded.write.mode("overwrite").parquet(
             os.path.join(self.table_dir, "history", f"closed_by_batch={batch_id}")
         )
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"last_batch_id": batch_id, "snapshot": snap}, fh)
-        os.replace(tmp, self._meta_path)
-        self.last_batch_id = batch_id
+        self._state.commit(batch_id, {"snapshot": snap})
         self._snapshot = snap
 
 

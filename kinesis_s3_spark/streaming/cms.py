@@ -11,15 +11,9 @@ Design for the loader's restart semantics:
   rows through the shuffle); only the d×w matrix itself — bounded by
   construction, 4×256 cells here — lives driver-side, exactly like
   k-means centroids.
-* state survives restarts: the matrix is persisted (atomic
-  tmp+rename) next to the streaming checkpoint after every applied
-  batch, and reloaded on construction.
-* replays don't double-count: foreachBatch re-delivers the last
-  uncommitted batch after a crash/restart with the SAME batch_id;
-  batch ids are monotonic, so the accumulator records the last
-  applied id and skips anything not strictly newer. Together with the
-  emitter's idempotent overwrite this makes the whole foreachBatch
-  body replay-safe regardless of where the previous run died.
+* state survives restarts and replays never double-count: the matrix
+  and the last applied batch id persist through
+  streaming/replay_state.py, next to the streaming checkpoint.
 
 Merge correctness (streamed == batch over the same data) is proved by
 tests/test_stateful.py::test_streaming_countmin_matches_batch_sketch,
@@ -28,13 +22,11 @@ including a checkpoint stop/restart in the middle of the corpus.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kinesis_s3_spark.operators.sketches import cms_cells, words_of
+from kinesis_s3_spark.streaming.replay_state import ReplayState
 
 STATE_FILE = "countmin.json"
 
@@ -47,24 +39,19 @@ class CountMinAccumulator:
     equals the batch sketch over every applied batch's payloads."""
 
     def __init__(self, state_dir: str) -> None:
-        os.makedirs(state_dir, exist_ok=True)
-        self._path = os.path.join(state_dir, STATE_FILE)
-        self.cells: dict[tuple[int, int], int] = {}
-        self.last_batch_id = -1
-        if os.path.exists(self._path):
-            with open(self._path) as fh:
-                data = json.load(fh)
-            self.last_batch_id = data["last_batch_id"]
-            self.cells = {
-                (int(d), int(b)): int(c)
-                for d, b, c in data["cells"]
-            }
+        self._state = ReplayState(state_dir, STATE_FILE)
+        self.cells: dict[tuple[int, int], int] = {
+            (int(d), int(b)): int(c)
+            for d, b, c in self._state.loaded.get("cells", [])
+        }
+
+    @property
+    def last_batch_id(self) -> int:
+        return self._state.last_batch_id
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Fold one micro-batch's payload words into the matrix.
-        Batches at or below the last applied id are replays — skipped,
-        so restart re-delivery never double-counts."""
-        if batch_id <= self.last_batch_id:
+        """Fold one micro-batch's payload words into the matrix."""
+        if self._state.seen(batch_id):
             return
         words = batch_df.select(F.explode(words_of(F.col("value"))).alias("word")).filter(
             F.col("word") != ""
@@ -72,20 +59,9 @@ class CountMinAccumulator:
         for row in cms_cells(words).collect():  # ≤ d·w rows by construction
             key = (int(row["d"]), int(row["bucket"]))
             self.cells[key] = self.cells.get(key, 0) + int(row["cnt"])
-        self.last_batch_id = batch_id
-        self._save()
-
-    def _save(self) -> None:
-        tmp = self._path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "last_batch_id": self.last_batch_id,
-                    "cells": [[d, b, c] for (d, b), c in sorted(self.cells.items())],
-                },
-                fh,
-            )
-        os.replace(tmp, self._path)
+        self._state.commit(
+            batch_id, {"cells": [[d, b, c] for (d, b), c in sorted(self.cells.items())]}
+        )
 
     def estimate(self, word: str) -> int:
         """Point lookup: min over rows of the word's cells (0 if any

@@ -12,9 +12,8 @@ incrementally with ≤ B rows collected per batch.
 Fixed ABSOLUTE bins (64 × 64 B, overflow clamped into the top bin)
 rather than the batch operator's observed-range bins: a stream cannot
 two-pass for min/max, and fixed bins are what make slices mergeable
-across batches and restarts. Same replay-safe persisted-state design
-as CountMinAccumulator (atomic tmp+rename next to the checkpoint,
-monotonic batch-id skip for re-deliveries).
+across batches and restarts. State persists through
+streaming/replay_state.py, like CountMinAccumulator's.
 
 Quantile read-off mirrors the batch operator: right edge of the bin
 holding rank ceil(q·n) — one-sided error ≤ one bin width (64 B).
@@ -22,12 +21,12 @@ holding rank ceil(q·n) — one-sided error ≤ one bin width (64 B).
 
 from __future__ import annotations
 
-import json
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kinesis_s3_spark.streaming.replay_state import ReplayState
 
 HIST_BINS = 64
 BIN_WIDTH = 64  # bytes per bin; range [0, 4096), overflow -> top bin
@@ -82,42 +81,28 @@ class SizeHistogramAccumulator:
         bin_width: float = BIN_WIDTH,
         state_file: str = STATE_FILE,
     ) -> None:
-        os.makedirs(state_dir, exist_ok=True)
-        self._path = os.path.join(state_dir, state_file)
+        self._state = ReplayState(state_dir, state_file)
         self._value_col = value_col
         self._bin_width = bin_width
-        self.bins: dict[int, int] = {}
-        self.last_batch_id = -1
-        if os.path.exists(self._path):
-            with open(self._path) as fh:
-                data = json.load(fh)
-            self.last_batch_id = data["last_batch_id"]
-            self.bins = {int(b): int(c) for b, c in data["bins"]}
+        self.bins: dict[int, int] = {
+            int(b): int(c) for b, c in self._state.loaded.get("bins", [])
+        }
+
+    @property
+    def last_batch_id(self) -> int:
+        return self._state.last_batch_id
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Fold one micro-batch's record sizes into the histogram.
-        Batches at or below the last applied id are replays — skipped,
-        so restart re-delivery never double-counts."""
-        if batch_id <= self.last_batch_id:
+        """Fold one micro-batch's record sizes into the histogram."""
+        if self._state.seen(batch_id):
             return
         rows = size_bins(batch_df, self._value_col, self._bin_width).collect()
         for row in rows:  # ≤ HIST_BINS rows
             b = int(row["bin"])
             self.bins[b] = self.bins.get(b, 0) + int(row["cnt"])
-        self.last_batch_id = batch_id
-        self._save()
-
-    def _save(self) -> None:
-        tmp = self._path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "last_batch_id": self.last_batch_id,
-                    "bins": [[b, c] for b, c in sorted(self.bins.items())],
-                },
-                fh,
-            )
-        os.replace(tmp, self._path)
+        self._state.commit(
+            batch_id, {"bins": [[b, c] for b, c in sorted(self.bins.items())]}
+        )
 
     def psi_against(self, ref_bins: dict[int, int]) -> float:
         """Population Stability Index of THIS histogram against a

@@ -5,7 +5,8 @@ so the stream maintains the distinct-payload cardinality incrementally
 accumulator MAX-merges them into a persisted 64-register array.
 
 Same contract as streaming/cms.py (plugged into run_loader via the
-``accumulators`` hook), with one HLL-specific nicety: max-merge is
+``accumulators`` hook, state persisted through
+streaming/replay_state.py), with one HLL-specific nicety: max-merge is
 IDEMPOTENT, so even a replayed batch could not corrupt the registers —
 the batch-id gate here only saves the redundant Spark job. This is the
 write-time half of the design sketch_hll_sliding reads from at query
@@ -19,9 +20,7 @@ collected. Driver state: 64 ints, like the k-means centroid pattern.
 
 from __future__ import annotations
 
-import json
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,15 +31,17 @@ from kinesis_s3_spark.operators.sketches import (
     _HLL_RANK_CAP,
     _HLL_SUFFIX_BITS,
 )
+from kinesis_s3_spark.streaming.replay_state import ReplayState
 
 STATE_FILE = "hll.json"
 
 
-def _bucket_rank(key):  # Column -> (bucket Column, rank Column)
-    """The shared 60-bit md5 split: top-6 bits route to a register,
-    the 54-bit suffix's leading-zero rank (capped at 48 for dyadic
-    exactness — see the sketches.py module note) is the candidate."""
-    h = F.conv(F.substring(F.md5(F.concat(F.lit("hll|"), key)), 1, 15), 16, 10).cast("long")
+def _bucket_rank(key, seed: str = "hll|"):  # Column -> (bucket Column, rank Column)
+    """The shared 60-bit md5 split of ``seed || key``: top-6 bits route
+    to a register, the 54-bit suffix's leading-zero rank (capped at 48
+    for dyadic exactness — see the sketches.py module note) is the
+    candidate."""
+    h = F.conv(F.substring(F.md5(F.concat(F.lit(seed), key)), 1, 15), 16, 10).cast("long")
     suffix_mod = 1 << _HLL_SUFFIX_BITS
     bucket = F.shiftrightunsigned(h, _HLL_SUFFIX_BITS)
     rank = F.least(
@@ -58,18 +59,17 @@ class HLLAccumulator:
     ``estimate()`` reads the cardinality off the registers."""
 
     def __init__(self, state_dir: str) -> None:
-        os.makedirs(state_dir, exist_ok=True)
-        self._path = os.path.join(state_dir, STATE_FILE)
-        self.registers = [0] * HLL_M
-        self.last_batch_id = -1
-        if os.path.exists(self._path):
-            with open(self._path) as fh:
-                data = json.load(fh)
-            self.last_batch_id = data["last_batch_id"]
-            self.registers = [int(r) for r in data["registers"]]
+        self._state = ReplayState(state_dir, STATE_FILE)
+        self.registers = [
+            int(r) for r in self._state.loaded.get("registers", [0] * HLL_M)
+        ]
+
+    @property
+    def last_batch_id(self) -> int:
+        return self._state.last_batch_id
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.last_batch_id:
+        if self._state.seen(batch_id):
             return  # replay: max-merge would be a no-op anyway
         bucket, rank = _bucket_rank(F.col("value").cast("string"))
         rows = (
@@ -81,16 +81,7 @@ class HLLAccumulator:
         for row in rows:
             b = int(row["bucket"])
             self.registers[b] = max(self.registers[b], int(row["reg"]))
-        self.last_batch_id = batch_id
-        self._save()
-
-    def _save(self) -> None:
-        tmp = self._path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"last_batch_id": self.last_batch_id, "registers": self.registers}, fh
-            )
-        os.replace(tmp, self._path)
+        self._state.commit(batch_id, {"registers": self.registers})
 
     def merge(self, other: "HLLAccumulator") -> None:
         """Pairwise-MAX union with another shard — the operation that
@@ -130,40 +121,31 @@ class DailyHLLAccumulator:
     Distributed work per batch: one projection + groupBy(day, bucket)
     max (map-side combined); ≤ |days-in-batch| × m rows collected.
     Driver state: m ints per seen day, like the CMS/histogram
-    accumulators. Replay-safe: the batch-id gate skips re-applied
-    batches, and max-merge would be idempotent even without it."""
+    accumulators, persisted through streaming/replay_state.py (and
+    max-merge would be idempotent even without its batch-id gate)."""
 
     def __init__(self, state_dir: str, day_col, key_col, seed: str = "hlls|") -> None:
-        os.makedirs(state_dir, exist_ok=True)
-        self._path = os.path.join(state_dir, DAILY_STATE_FILE)
+        self._state = ReplayState(state_dir, DAILY_STATE_FILE)
         self._day_col = day_col
         self._key_col = key_col
         self._seed = seed
-        self.shards: dict[str, list[int]] = {}
-        self.last_batch_id = -1
-        if os.path.exists(self._path):
-            with open(self._path) as fh:
-                data = json.load(fh)
-            self.last_batch_id = data["last_batch_id"]
-            self.shards = {d: [int(r) for r in regs] for d, regs in data["shards"].items()}
+        self.shards: dict[str, list[int]] = {
+            d: [int(r) for r in regs]
+            for d, regs in self._state.loaded.get("shards", {}).items()
+        }
+
+    @property
+    def last_batch_id(self) -> int:
+        return self._state.last_batch_id
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.last_batch_id:
+        if self._state.seen(batch_id):
             return
-        h = F.conv(
-            F.substring(F.md5(F.concat(F.lit(self._seed), self._key_col)), 1, 15), 16, 10
-        ).cast("long")
-        suffix_mod = 1 << _HLL_SUFFIX_BITS
-        rank = F.least(
-            F.when(h % suffix_mod == 0, F.lit(_HLL_SUFFIX_BITS + 1)).otherwise(
-                F.lit(_HLL_SUFFIX_BITS + 1) - F.length(F.bin(h % suffix_mod))
-            ),
-            F.lit(_HLL_RANK_CAP),
-        )
+        bucket, rank = _bucket_rank(self._key_col, self._seed)
         rows = (
             batch_df.select(
                 F.date_format(self._day_col, "yyyy-MM-dd").alias("day"),
-                F.shiftrightunsigned(h, _HLL_SUFFIX_BITS).alias("bucket"),
+                bucket.alias("bucket"),
                 rank.alias("rank"),
             )
             .where(F.col("day").isNotNull())
@@ -175,14 +157,7 @@ class DailyHLLAccumulator:
             regs = self.shards.setdefault(row["day"], [0] * HLL_M)
             b = int(row["bucket"])
             regs[b] = max(regs[b], int(row["reg"]))
-        self.last_batch_id = batch_id
-        self._save()
-
-    def _save(self) -> None:
-        tmp = self._path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"last_batch_id": self.last_batch_id, "shards": self.shards}, fh)
-        os.replace(tmp, self._path)
+        self._state.commit(batch_id, {"shards": self.shards})
 
     def sliding_wau(self, window_days: int = 7) -> dict[str, float]:
         """day → distinct-user estimate over [day-(w-1), day], by

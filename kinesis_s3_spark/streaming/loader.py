@@ -29,7 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 from kinesis_s3_spark.config import InitialPosition, LoaderConfig
 from kinesis_s3_spark.sinks.badrows_sink import build_bad_sink
 from kinesis_s3_spark.sinks.emitter import emit
-from kinesis_s3_spark.streaming.monitoring import init_sentry
+from kinesis_s3_spark.streaming.monitoring import LoaderListener, init_sentry
 from kinesis_s3_spark.streaming.runmeta import RunMeta
 from kinesis_s3_spark.streaming.tracking import SnowplowTracker
 
@@ -130,9 +130,13 @@ def run_loader(
 
     ``tracker``: a pre-built SnowplowTracker (tests inject one with a
     captured ``send``); when None and monitoring.snowplow.collector is
-    configured, one is built from config. Started here — app_initialized
-    + the 300 s heartbeat thread — mirroring initializeSnowplowTracking
-    running before the KCL worker (S3Loader.scala:44-47).
+    configured, one is built from config. Started just before the query
+    — app_initialized + the 300 s heartbeat thread — mirroring
+    initializeSnowplowTracking running before the KCL worker
+    (S3Loader.scala:44-47); a LoaderListener sends
+    storage_write_failed if the query fails and stops the tracker when
+    it ends. With neither, no listener is registered and no thread
+    starts.
 
     ``dedupe_watermark``: when set (e.g. "1 hour"), payloads whose
     content hash was already seen within the window are dropped before
@@ -146,7 +150,8 @@ def run_loader(
     words into a persisted Count-Min matrix, or
     streaming/histogram.py:SizeHistogramAccumulator), applied in order
     after the flush. Replay-safe means an accumulator skips re-delivered
-    batch ids and reloads its state file on restart."""
+    batch ids and reloads its state file on restart; the accumulators
+    here get both from streaming/replay_state.py:ReplayState."""
     # output.s3.customEndpoint → s3a endpoint conf, applied before the
     # sink writes its first object (the buildS3Client analogue)
     hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -161,14 +166,6 @@ def run_loader(
         from kinesis_s3_spark.streaming.dedup import with_incremental_dedup
 
         stream = with_incremental_dedup(stream, dedupe_watermark)
-    if tracker is None and cfg.monitoring.snowplow_collector:
-        tracker = SnowplowTracker(
-            cfg.monitoring.snowplow_collector,
-            cfg.monitoring.snowplow_app_id,
-            heartbeat_interval_ms=cfg.monitoring.heartbeat_interval_ms,
-        )
-    if tracker is not None:
-        tracker.start()
     # build the dead-letter sink EAGERLY: the Kinesis stream
     # exists/ACTIVE probe must fail the app at startup, before the
     # query runs (S3Loader.scala:39, KinesisSink.scala:49)
@@ -201,4 +198,20 @@ def run_loader(
     )
     if cfg.checkpoint_location:
         writer = writer.option("checkpointLocation", cfg.checkpoint_location)
-    return writer.start()
+    if tracker is None and cfg.monitoring.snowplow_collector:
+        tracker = SnowplowTracker(
+            cfg.monitoring.snowplow_collector,
+            cfg.monitoring.snowplow_app_id,
+            heartbeat_interval_ms=cfg.monitoring.heartbeat_interval_ms,
+        )
+    if tracker is None:
+        return writer.start()
+    tracker.start()
+    listener = LoaderListener(tracker=tracker)
+    spark.streams.addListener(listener)
+    try:
+        return writer.start()
+    except Exception:
+        spark.streams.removeListener(listener)
+        tracker.stop()
+        raise

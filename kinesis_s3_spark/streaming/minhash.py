@@ -4,16 +4,16 @@ streaming dedup (streaming/dedup.py) and the last gap between the
 batch dedup suite and the reference's always-on streaming posture.
 
 Pattern mirrors DailyHLLAccumulator (streaming/hll.py): an accumulator
-on the ``run_loader`` hook folds each micro-batch in and persists
-replay-safe state. The one structural difference is SIZE: an HLL shard
-is 64 ints and lives on the driver; a MinHash signature store is
-INDEX-sized (4 band keys + a 12-hash signature per document — the same
-cardinality as the batch bands frame), so shards are persisted as
-PARQUET under the state dir, one directory per micro-batch, written
-with per-batch overwrite so a replayed batch rewrites its own shard
-byte-for-byte instead of duplicating it. On a cluster the state dir is
-an object-store prefix and every operation below is an equi-join —
-nothing driver-sized anywhere.
+on the ``run_loader`` hook folds each micro-batch in and gates it
+through streaming/replay_state.py. The one structural difference is
+SIZE: an HLL shard is 64 ints and lives on the driver; a MinHash
+signature store is INDEX-sized (4 band keys + a 12-hash signature per
+document — the same cardinality as the batch bands frame), so shards
+are persisted as PARQUET under the state dir, one directory per
+micro-batch, written with per-batch overwrite so a replayed batch
+rewrites its own shard byte-for-byte instead of duplicating it. On a
+cluster the state dir is an object-store prefix and every operation
+below is an equi-join — nothing driver-sized anywhere.
 
 The shards use EXACTLY the batch pipeline's shingle→signature→band
 derivation (operators/dedup.py: shingle_sets → minhash_signatures →
@@ -38,7 +38,6 @@ the near-dup index a training-data pipeline needs at ingest time.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,8 +49,10 @@ from kinesis_s3_spark.operators.dedup import (
     minhash_signatures,
     shingle_sets,
 )
+from kinesis_s3_spark.streaming.replay_state import ReplayState
 
 META_FILE = "minhash_meta.json"
+_SHARD_PREFIX = "bands_batch="
 
 
 def _doc_bands(docs: DataFrame) -> DataFrame:
@@ -72,25 +73,20 @@ class MinHashShardStore:
     NULL are dropped, not crashed on (the bad-row path owns them)."""
 
     def __init__(self, state_dir: str, doc_id_col, text_col) -> None:
-        os.makedirs(state_dir, exist_ok=True)
+        self._state = ReplayState(state_dir, META_FILE)
         self._dir = state_dir
-        self._meta = os.path.join(state_dir, META_FILE)
         self._doc_id_col = doc_id_col
         self._text_col = text_col
-        self.applied: list[int] = []
-        if os.path.exists(self._meta):
-            with open(self._meta) as fh:
-                self.applied = sorted(json.load(fh)["applied"])
 
     @property
     def last_batch_id(self) -> int:
-        return self.applied[-1] if self.applied else -1
+        return self._state.last_batch_id
 
     def _shard_path(self, batch_id: int) -> str:
-        return os.path.join(self._dir, f"bands_batch={batch_id}")
+        return os.path.join(self._dir, f"{_SHARD_PREFIX}{batch_id}")
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied:
+        if self._state.seen(batch_id):
             return  # replay: the shard on disk is already this batch's
         # try_cast, not cast: under ANSI mode (Spark 4 default) a
         # malformed payload would otherwise fail the whole batch
@@ -103,18 +99,22 @@ class MinHashShardStore:
         # attempt is replaced wholesale on redelivery — idempotent like
         # emit()'s per-batch overwrite
         _doc_bands(docs).write.mode("overwrite").parquet(self._shard_path(batch_id))
-        self.applied = sorted(self.applied + [batch_id])
-        tmp = self._meta + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"applied": self.applied}, fh)
-        os.replace(tmp, self._meta)
+        self._state.commit(batch_id, {})
 
     def bands(self, spark: SparkSession) -> DataFrame:
-        """The full band-signature index: union of all applied shards
-        (a multi-path parquet scan — one listing, no driver data)."""
-        if not self.applied:
+        """The full band-signature index: union of all committed shards
+        (a multi-path parquet scan — one listing, no driver data). A
+        shard above the last committed batch id is a crashed attempt's
+        and stays out until its batch is re-delivered and committed."""
+        ids = []
+        for name in os.listdir(self._dir):
+            if name.startswith(_SHARD_PREFIX):
+                b = int(name[len(_SHARD_PREFIX) :])
+                if b <= self.last_batch_id:
+                    ids.append(b)
+        if not ids:
             raise ValueError("MinHashShardStore: no shards applied yet")
-        return spark.read.parquet(*[self._shard_path(b) for b in self.applied])
+        return spark.read.parquet(*[self._shard_path(b) for b in sorted(ids)])
 
     def candidate_pairs(self, spark: SparkSession) -> DataFrame:
         """(d1, d2) near-dup candidates over the corpus so far — the

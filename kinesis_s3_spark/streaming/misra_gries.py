@@ -23,19 +23,17 @@ tests/test_stateful.py replays the documents corpus through the
 loader with a stop/restart and gates the streamed state against the
 batch ``sketch_heavy_hitters`` output.
 
-Replay-safe like every accumulator here: monotonic batch-id skip +
-atomic tmp/rename persistence next to the checkpoint.
+Replay-safe like every accumulator here: state persists through
+streaming/replay_state.py.
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kinesis_s3_spark.operators.sketches import MG_K, words_of
+from kinesis_s3_spark.streaming.replay_state import ReplayState
 
 STATE_FILE = "misra_gries.json"
 
@@ -76,21 +74,18 @@ class MisraGriesAccumulator:
     ``accumulators=`` hook like the CMS/histogram/HLL/minhash peers."""
 
     def __init__(self, state_dir: str, k: int = MG_K) -> None:
-        os.makedirs(state_dir, exist_ok=True)
-        self._path = os.path.join(state_dir, STATE_FILE)
+        self._state = ReplayState(state_dir, STATE_FILE)
         self.k = k
-        self.counters: dict[str, int] = {}
-        self.total = 0  # exact stream length (words), for the bound
-        self.last_batch_id = -1
-        if os.path.exists(self._path):
-            with open(self._path) as fh:
-                data = json.load(fh)
-            self.last_batch_id = data["last_batch_id"]
-            self.total = int(data["total"])
-            self.counters = {w: int(c) for w, c in data["counters"]}
+        data = self._state.loaded
+        self.total = int(data.get("total", 0))  # exact stream length (words), for the bound
+        self.counters: dict[str, int] = {w: int(c) for w, c in data.get("counters", [])}
+
+    @property
+    def last_batch_id(self) -> int:
+        return self._state.last_batch_id
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.last_batch_id:
+        if self._state.seen(batch_id):
             return
         words = batch_df.select(
             F.explode(words_of(F.col("value").cast("string"))).alias("word")
@@ -106,21 +101,9 @@ class MisraGriesAccumulator:
             self.counters[w] = self.counters.get(w, 0) + int(row["cnt"])
         self.counters = _mg_merge(self.counters, self.k)
         self.total += int(n)
-        self.last_batch_id = batch_id
-        self._save()
-
-    def _save(self) -> None:
-        tmp = self._path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "last_batch_id": self.last_batch_id,
-                    "total": self.total,
-                    "counters": sorted(self.counters.items()),
-                },
-                fh,
-            )
-        os.replace(tmp, self._path)
+        self._state.commit(
+            batch_id, {"total": self.total, "counters": sorted(self.counters.items())}
+        )
 
     def candidates(self) -> dict[str, int]:
         """word → counter (a lower bound on true frequency, within

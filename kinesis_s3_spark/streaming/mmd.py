@@ -21,20 +21,19 @@ streaming statistic is bit-equal to the batch operator run over
 the two arms against each other on the same data, alert tranche
 included.
 
-Same replay-safe persisted-state design as CountMinAccumulator /
-SizeHistogramAccumulator: atomic tmp+rename next to the checkpoint,
-monotonic batch-id skip for re-deliveries.
+State persists through streaming/replay_state.py, like
+CountMinAccumulator's and SizeHistogramAccumulator's.
 """
 
 from __future__ import annotations
 
-import json
 import math
-import os
 from decimal import Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kinesis_s3_spark.streaming.replay_state import ReplayState
 
 STATE_FILE = "embedding_moments.json"
 
@@ -69,28 +68,24 @@ class EmbeddingMomentAccumulator:
     sums over every applied batch's vectors."""
 
     def __init__(self, state_dir: str, embed_col=None, state_file: str = STATE_FILE) -> None:
-        os.makedirs(state_dir, exist_ok=True)
-        self._path = os.path.join(state_dir, state_file)
+        self._state = ReplayState(state_dir, state_file)
         self._embed_col = embed_col if embed_col is not None else default_embed_col()
         # pos -> [n, Decimal Σx, Decimal Σround(x²,10)]
-        self.moments: dict[int, list] = {}
-        self.last_batch_id = -1
-        if os.path.exists(self._path):
-            with open(self._path) as fh:
-                data = json.load(fh)
-            self.last_batch_id = data["last_batch_id"]
-            self.moments = {
-                int(p): [int(n), Decimal(s), Decimal(s2)]
-                for p, n, s, s2 in data["moments"]
-            }
+        self.moments: dict[int, list] = {
+            int(p): [int(n), Decimal(s), Decimal(s2)]
+            for p, n, s, s2 in self._state.loaded.get("moments", [])
+        }
+
+    @property
+    def last_batch_id(self) -> int:
+        return self._state.last_batch_id
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
         """Fold one micro-batch's vectors into the per-dim decimal
-        sums. Batches at or below the last applied id are replays —
-        skipped, so restart re-delivery never double-counts. The
-        per-batch aggregation is distributed and map-side combined —
-        at most dim rows cross the shuffle and reach the driver."""
-        if batch_id <= self.last_batch_id:
+        sums. The per-batch aggregation is distributed and map-side
+        combined — at most dim rows cross the shuffle and reach the
+        driver."""
+        if self._state.seen(batch_id):
             return
         f = batch_df.select(F.posexplode(self._embed_col).alias("pos", "x")).where(
             F.col("x").isNotNull()
@@ -106,23 +101,14 @@ class EmbeddingMomentAccumulator:
             cur[0] += int(row["n"])
             cur[1] += Decimal(row["s"])
             cur[2] += Decimal(row["s2"])
-        self.last_batch_id = batch_id
-        self._save()
-
-    def _save(self) -> None:
-        tmp = self._path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "last_batch_id": self.last_batch_id,
-                    "moments": [
-                        [p, n, str(s), str(s2)]
-                        for p, (n, s, s2) in sorted(self.moments.items())
-                    ],
-                },
-                fh,
-            )
-        os.replace(tmp, self._path)
+        self._state.commit(
+            batch_id,
+            {
+                "moments": [
+                    [p, n, str(s), str(s2)] for p, (n, s, s2) in sorted(self.moments.items())
+                ]
+            },
+        )
 
     def snapshot(self) -> dict[int, list]:
         """A reference-moments copy (pin yesterday's state as today's

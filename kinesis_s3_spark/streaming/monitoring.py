@@ -5,9 +5,9 @@
   ``<prefix>.latency_collector_to_load:<sec>|g|#tags`` — same wire
   format (Datadog-style tags, StatsD.scala:83-91).
 - Lifecycle tracking (O19, SnowplowTracking.scala:89-197): app
-  initialized / shutdown / heartbeat / write-failure events → here a
-  pluggable callback + StreamingQueryListener, since the Snowplow
-  tracker endpoint is deployment-specific.
+  initialized / shutdown / heartbeat / write-failure events, sent by
+  streaming/tracking.py's SnowplowTracker; ``LoaderListener`` ends it
+  with the loader's query.
 - Sentry (O20, Monitoring.scala:62-65): behind an import-try; absent
   SDK degrades to logging, matching the reference's optional DSN.
 
@@ -26,6 +26,7 @@ from pyspark.sql.streaming import listener as L
 
 from kinesis_s3_spark.config import MonitoringConfig
 from kinesis_s3_spark.sinks.emitter import BatchMeta
+from kinesis_s3_spark.streaming.tracking import SnowplowTracker
 
 log = logging.getLogger("kinesis_s3_spark.monitoring")
 
@@ -216,40 +217,47 @@ def capture_error(error: BaseException) -> None:
 
 
 class LoaderListener(L.StreamingQueryListener):
-    """O19 lifecycle events via the streaming listener bus:
-    onQueryStarted → app_initialized, onQueryProgress → heartbeat,
-    onQueryTerminated → app_shutdown/storage_write_failed
-    (SnowplowTracking.scala:89-197)."""
+    """O18/O19 on the streaming listener bus. ``statsd`` counts each
+    progress report's input rows. ``tracker``, a started
+    ``SnowplowTracker``, follows the first query that starts after the
+    listener is registered (Spark calls onQueryStarted from inside
+    ``start()``, so ``run_loader`` registers it just before starting its
+    query). When that query ends, the listener sends
+    ``storage_write_failed`` with the exception message if it failed,
+    then stops the tracker: heartbeats off, ``app_shutdown`` sent
+    (SnowplowTracking.scala:92-95,117-145)."""
 
-    def __init__(self, statsd: StatsDClient | None = None, tracker=None) -> None:
+    def __init__(
+        self, statsd: StatsDClient | None = None, tracker: SnowplowTracker | None = None
+    ) -> None:
         self.statsd = statsd
-        self.tracker = tracker  # callable(event_name: str, payload: dict)
-
-    def _track(self, name: str, payload: dict) -> None:
-        if self.tracker is not None:
-            try:
-                self.tracker(name, payload)
-            except Exception as e:  # noqa: BLE001 — monitoring must not kill the query
-                log.warning("tracker callback failed: %s", e)
+        self.tracker = tracker
+        self._query_id: str | None = None
 
     def onQueryStarted(self, event: L.QueryStartedEvent) -> None:
-        self._track("app_initialized", {"id": str(event.id), "name": event.name})
+        if self._query_id is None:
+            self._query_id = str(event.id)
 
     def onQueryProgress(self, event: L.QueryProgressEvent) -> None:
-        p = event.progress
-        self._track(
-            "app_heartbeat",
-            {"batchId": p.batchId, "numInputRows": p.numInputRows},
-        )
         if self.statsd is not None:
-            self.statsd.send("batch_rows", str(p.numInputRows), "c")
+            self.statsd.send("batch_rows", str(event.progress.numInputRows), "c")
 
     def onQueryIdle(self, event: L.QueryIdleEvent) -> None:
         pass
 
     def onQueryTerminated(self, event: L.QueryTerminatedEvent) -> None:
         if event.exception:
-            self._track("storage_write_failed", {"error": str(event.exception)})
             capture_error(RuntimeError(str(event.exception)))
-        else:
-            self._track("app_shutdown", {"id": str(event.id)})
+        if self.tracker is None or str(event.id) != self._query_id:
+            return
+        try:
+            if event.exception:
+                self.tracker.storage_write_failed(
+                    last_retry_period_ms=0,
+                    failure_count=1,
+                    initial_failure_time_ms=self.tracker.now_ms(),
+                    message=str(event.exception),
+                )
+            self.tracker.stop()
+        except Exception as e:  # noqa: BLE001 — monitoring must not kill the query
+            log.warning("snowplow tracker failed: %s", e)

@@ -10,18 +10,16 @@ O(|history|) scan. Unlike the driver-held sketch accumulators
 here is a real table with unbounded key cardinality, so it lives in
 parquet and is merged BY SPARK, never collected.
 
-Durability protocol (same replay-safety contract as the sketch
-accumulators, scaled up):
+Durability protocol (the sketch accumulators' streaming/replay_state.py
+gate, scaled up):
 
-- state versions are immutable directories ``state_v<N>``; a pointer
-  file ``mv_meta.json`` (atomic tmp+``os.replace``) names the current
-  version and the last applied batch id;
-- ``update(batch_df, batch_id)`` skips batch ids at or below the last
-  applied one, so restart re-delivery never double-counts;
-- a crash between writing ``state_v<N+1>`` and swinging the pointer
-  leaves the pointer on v<N>: the next update simply rebuilds v<N+1>
+- state versions are immutable directories ``state_v<N>``; the
+  replay-state file ``mv_meta.json`` names the current version next to
+  the last applied batch id, so a re-delivered batch id is skipped;
+- a crash between writing ``state_v<N+1>`` and committing the state
+  file leaves it on v<N>: the next update simply rebuilds v<N+1>
   from v<N> + the redelivered batch. Old versions are pruned after the
-  pointer moves.
+  commit.
 
 At 100 TB the same code holds: the merge is a key-partitioned
 aggregate (shuffle on the view key only), the state write is one
@@ -31,12 +29,13 @@ itself is huge), and nothing is driver-sized.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kinesis_s3_spark.streaming.replay_state import ReplayState
 
 META_FILE = "mv_meta.json"
 
@@ -56,20 +55,16 @@ class ParquetMaterializedView:
         key_col: Column | None = None,
         key_name: str = "view_key",
     ) -> None:
-        os.makedirs(state_dir, exist_ok=True)
+        self._state = ReplayState(state_dir, META_FILE)
         self.spark = spark
         self.dir = state_dir
         self.key_col = key_col if key_col is not None else F.lit("all")
         self.key_name = key_name
-        self._meta_path = os.path.join(state_dir, META_FILE)
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as fh:
-                meta = json.load(fh)
-            self.version = int(meta["version"])
-            self.last_batch_id = int(meta["last_batch_id"])
-        else:
-            self.version = 0
-            self.last_batch_id = -1
+        self.version = int(self._state.loaded.get("version", 0))
+
+    @property
+    def last_batch_id(self) -> int:
+        return self._state.last_batch_id
 
     # -- state io ------------------------------------------------------------
 
@@ -101,7 +96,7 @@ class ParquetMaterializedView:
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
         """Fold one micro-batch into the view. Mergeable-aggregate
         algebra only (counts and sums add), one shuffle on the key."""
-        if batch_id <= self.last_batch_id:
+        if self._state.seen(batch_id):
             return
         merged = (
             self.read()
@@ -114,10 +109,7 @@ class ParquetMaterializedView:
         )
         next_version = self.version + 1
         merged.write.mode("overwrite").parquet(self._state_path(next_version))
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"version": next_version, "last_batch_id": batch_id}, fh)
-        os.replace(tmp, self._meta_path)
-        prev, self.version, self.last_batch_id = self.version, next_version, batch_id
+        self._state.commit(batch_id, {"version": next_version})
+        prev, self.version = self.version, next_version
         if prev > 0:  # pointer has moved; prior version is garbage
             shutil.rmtree(self._state_path(prev), ignore_errors=True)

@@ -25,7 +25,10 @@ tracker must never take down the loader). ``send`` is injectable so
 tests capture payloads without a network.
 
 The heartbeat runs on a daemon thread with injectable ``sleep`` so a
-fake clock can drive it deterministically in tests.
+fake clock can drive it deterministically in tests. The loader drives
+the lifecycle: ``run_loader`` calls ``start()`` and registers a
+``streaming.monitoring.LoaderListener``, which sends
+``storage_write_failed`` when the query fails and then ``stop()``.
 """
 
 from __future__ import annotations
@@ -86,10 +89,12 @@ class SnowplowTracker:
             send = _http_send(collector_uri)
         self._send = send
         self.app_id = app_id
-        self._now_ms = now_ms or (lambda: int(time.time() * 1000))
-        self._sleep = sleep or time.sleep
-        self.heartbeat_interval_ms = heartbeat_interval_ms
+        self.now_ms = now_ms or (lambda: int(time.time() * 1000))
         self._stop = threading.Event()
+        # the default sleep wakes on stop(), so the heartbeat thread
+        # ends with the tracker instead of up to one interval later
+        self._sleep = sleep or self._stop.wait
+        self.heartbeat_interval_ms = heartbeat_interval_ms
         self._heartbeat_thread: threading.Thread | None = None
 
     # -- wire format -------------------------------------------------------
@@ -102,7 +107,7 @@ class SnowplowTracker:
     def track(self, name: str, data: dict | None = None) -> None:
         """trackSelfDescribingEvent wire shape: payload_data envelope →
         one ue event → ue_pr = unstruct_event wrapper → inner event."""
-        ts = str(self._now_ms())
+        ts = str(self.now_ms())
         envelope = {
             "schema": PAYLOAD_DATA_SCHEMA,
             "data": [
@@ -177,6 +182,9 @@ class SnowplowTracker:
 
     def stop(self) -> None:
         """The shutdown-hook analogue: stop heartbeats, send
-        app_shutdown (SnowplowTracking.scala:92-95)."""
+        app_shutdown (SnowplowTracking.scala:92-95). Only the first call
+        sends."""
+        if self._stop.is_set():
+            return
         self._stop.set()
         self.app_shutdown()

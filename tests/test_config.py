@@ -155,5 +155,5 @@ def test_cli_countmin_flag_builds_accumulator(tmp_path, monkeypatch):
     assert rc == 0
     (cms,) = seen["accumulators"]
     assert isinstance(cms, CountMinAccumulator)
-    assert cms._path.startswith(str(state))
+    assert cms._state.path.startswith(str(state))
     assert seen["dedupe_watermark"] == "2 hours"

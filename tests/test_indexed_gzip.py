@@ -20,6 +20,7 @@ from kinesis_s3_spark.sinks.indexed_gzip import (
     read_all_via_splits,
     read_index,
     read_split,
+    split_ranges,
     write_indexed_file,
     write_indexed_gzip_grouped,
 )
@@ -57,6 +58,38 @@ def test_split_reads_are_independent_and_complete(tmp_path):
     assert read_split(path, points[7][1], None) == vals[700:]
     # full reassembly purely from splits
     assert read_all_via_splits(path) == vals
+
+
+def test_split_ranges_tile_the_file(tmp_path):
+    """split_ranges chains from the first sync point to the end of the
+    file: one range per sync point at target 0, fewer and larger ranges
+    at larger targets, and each range decodes on its own."""
+    path = str(tmp_path / "t.txt.gz")
+    vals = _vals(1234)
+    write_indexed_file(path, vals, sync_every=100)
+    index = path + ".index"
+    points, _n, nbytes = read_index(index)
+    assert [s for s, _e in split_ranges(index, 0)] == [off for _r, off in points]
+    for target in (0, 1500, 10**9):
+        ranges = split_ranges(index, target)
+        assert ranges[0][0] == points[0][1] and ranges[-1][1] == nbytes
+        assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))
+        assert all(e - s >= target for s, e in ranges[:-1])
+        assert [v for s, e in ranges for v in read_split(path, s, e)] == vals
+    assert len(split_ranges(index, 10**9)) == 1
+
+
+def test_read_index_rejects_corrupt_index(tmp_path):
+    """An index without sync points (a range from byte 0 would start in
+    the gzip header, which the raw-deflate reader cannot parse) or
+    without its total line is refused, not read as one big split."""
+    index = tmp_path / "t.txt.gz.index"
+    index.write_text("total\t0\t20\n")
+    with pytest.raises(ValueError, match="no sync-point"):
+        read_index(str(index))
+    index.write_text("0\t15\n")
+    with pytest.raises(ValueError, match="missing 'total'"):
+        read_index(str(index))
 
 
 def test_empty_and_tiny_files(tmp_path):

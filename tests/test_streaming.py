@@ -15,6 +15,7 @@ from kinesis_s3_spark.config import from_dict
 from kinesis_s3_spark.sinks.emitter import BatchMeta
 from kinesis_s3_spark.streaming.loader import run_loader
 from kinesis_s3_spark.streaming.monitoring import LoaderListener, StatsDClient
+from kinesis_s3_spark.streaming.tracking import STORAGE_TYPE, SnowplowTracker
 from kinesis_s3_spark.config import MonitoringConfig
 
 
@@ -95,9 +96,39 @@ def test_checkpoint_resume(spark, tmp_path):
     assert payloads == ["r1", "r2"]  # no duplicates after restart
 
 
+def _loader_cfg(spark, tmp_path):
+    inp = str(tmp_path / "in")
+    _write_input(spark, inp, ["x"])
+    return from_dict(
+        {
+            "purpose": "RAW",
+            "input": {"stream_name": "t", "kind": "file", "path": inp, "format": "parquet"},
+            "output": {"s3": {"path": str(tmp_path / "out"), "compression": "GZIP"}},
+            "buffer": {"time_limit_ms": 250},
+            "checkpoint_location": str(tmp_path / "ckpt"),
+        }
+    )
+
+
+def _tracked_events(sent: list[dict]) -> list[tuple[str, dict | None]]:
+    """(event name, data) of each payload_data envelope the tracker
+    sent, once app_shutdown has arrived (the listener bus is async)."""
+    deadline = time.time() + 10
+    while True:
+        events = []
+        for envelope in list(sent):
+            inner = json.loads(envelope["data"][0]["ue_pr"])["data"]
+            events.append((inner["schema"].split("/")[1], inner["data"]))
+        if events and events[-1][0] == "app_shutdown" or time.time() > deadline:
+            return events
+        time.sleep(0.2)
+
+
 def test_listener_and_statsd(spark, tmp_path):
-    """Lifecycle events fire (O19) and StatsD datagrams hit the wire in
-    the reference format (O18)."""
+    """StatsD datagrams hit the wire in the reference format (O18), and
+    the loader drives its Snowplow tracker (O19): app_initialized, then
+    heartbeats while the query runs, then app_shutdown once it stops,
+    after which the heartbeat thread is gone."""
     recv = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
     recv.bind(("127.0.0.1", 0))
     recv.settimeout(5)
@@ -111,47 +142,87 @@ def test_listener_and_statsd(spark, tmp_path):
             statsd_tags={"app": "t"},
         )
     )
-    events: list[tuple[str, dict]] = []
-    listener = LoaderListener(statsd=statsd, tracker=lambda n, p: events.append((n, p)))
+    listener = LoaderListener(statsd=statsd)
     spark.streams.addListener(listener)
-
-    inp = str(tmp_path / "in")
-    _write_input(spark, inp, ["x"])
-    cfg = from_dict(
-        {
-            "purpose": "RAW",
-            "input": {"stream_name": "t", "kind": "file", "path": inp, "format": "parquet"},
-            "output": {"s3": {"path": str(tmp_path / "out"), "compression": "GZIP"}},
-            "buffer": {"time_limit_ms": 250},
-            "checkpoint_location": str(tmp_path / "ckpt"),
-        }
-    )
-    metas = []
-
-    def flush(meta):
-        metas.append(meta)
-        statsd.report(meta)
-
+    sent: list[dict] = []
+    tracker = SnowplowTracker(None, "t", send=sent.append)
     try:
-        q = run_loader(spark, cfg, on_flush=flush, query_name="mon-test")
+        q = run_loader(
+            spark,
+            _loader_cfg(spark, tmp_path),
+            on_flush=statsd.report,
+            query_name="mon-test",
+            tracker=tracker,
+        )
         q.processAllAvailable()
         q.stop()
-        deadline = time.time() + 10
-        while time.time() < deadline and not any(
-            n == "app_shutdown" for n, _ in events
-        ):
-            time.sleep(0.2)
+        events = _tracked_events(sent)
     finally:
         spark.streams.removeListener(listener)
 
     names = [n for n, _ in events]
-    assert "app_initialized" in names
-    assert "app_shutdown" in names
+    assert names[0] == "app_initialized" and names[-1] == "app_shutdown", names
+    assert set(names[1:-1]) == {"app_heartbeat"}, names
+    tracker._heartbeat_thread.join(timeout=5)
+    assert not tracker._heartbeat_thread.is_alive()
 
-    datagram = recv.recvfrom(4096)[0].decode()
-    assert datagram.startswith("snowplow.s3loader.count:1|c")
-    assert datagram.endswith("|#app:t")
+    datagrams = []
+    recv.settimeout(1)
+    try:
+        while True:
+            datagrams.append(recv.recvfrom(4096)[0].decode())
+    except socket.timeout:
+        pass
     recv.close()
+    assert datagrams[0].startswith("snowplow.s3loader.count:1|c")
+    assert datagrams[0].endswith("|#app:t")
+    assert "snowplow.s3loader.batch_rows:1|c|#app:t" in datagrams
+
+
+def test_tracker_reports_a_failed_query(spark, tmp_path):
+    """A query that dies sends storage_write_failed with the exception
+    message, then app_shutdown (SnowplowTracking.scala:117-145)."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    def refuse(meta):
+        raise RuntimeError("s3 put refused")
+
+    sent: list[dict] = []
+    tracker = SnowplowTracker(None, "t", send=sent.append)
+    q = run_loader(
+        spark,
+        _loader_cfg(spark, tmp_path),
+        on_flush=refuse,
+        query_name="mon-fail",
+        tracker=tracker,
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination()
+    events = _tracked_events(sent)
+
+    names = [n for n, _ in events]
+    assert names[0] == "app_initialized", names
+    assert names[-2:] == ["storage_write_failed", "app_shutdown"], names
+    failed = events[-2][1]
+    assert "s3 put refused" in failed["message"]
+    assert (failed["storage"], failed["failureCount"]) == (STORAGE_TYPE, 1)
+
+
+def test_no_collector_starts_no_tracker(spark, tmp_path):
+    """Without monitoring.snowplow.collector the loader registers no
+    listener and starts no heartbeat thread."""
+    import threading
+
+    streams = spark._jsparkSession.streams()
+    before = len(streams.listListeners())
+    q = run_loader(spark, _loader_cfg(spark, tmp_path), query_name="mon-none")
+    try:
+        q.processAllAvailable()
+        assert len(streams.listListeners()) == before
+        assert not [t for t in threading.enumerate() if t.name == "snowplow-heartbeat"]
+    finally:
+        q.stop()
 
 
 def test_kinesis_option_assembly_all_positions():

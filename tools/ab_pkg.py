@@ -2,12 +2,11 @@
 copy from a pinned worktree) vs new (the tree), ABAB warm rounds in ONE
 SparkSession so host-window drift hits both arms equally.
 
-This generalizes tools/ab_interleaved.py (which swaps one module file)
-to query families whose implementation spans several modules (ann.py +
-embeddings.py + graph.py): the old arm is a complete package copy with
-every internal import rewritten to a distinct top-level name, so the
-two implementations coexist with separate registries and both ship to
-the Python workers as separate zips.
+It covers query families whose implementation spans several modules
+(ann.py + embeddings.py + graph.py): the old arm is a complete package
+copy with every internal import rewritten to a distinct top-level name,
+so the two implementations coexist with separate registries and both
+ship to the Python workers as separate zips.
 
 Setup (done once by the session, recorded in OPTIMIZATION_r13.md):
   git worktree add /tmp/wt_pre10 <commit>
