@@ -65,11 +65,13 @@ class InputConfig:
     the Structured Streaming source (file source for tests/dev)."""
 
     stream_name: str
-    kind: str = "file"  # "file" | "kinesis" | "rate"
+    kind: str = "file"  # "file" | "kinesis"
     region: str | None = None
     position: InitialPosition = InitialPosition.LATEST
     position_timestamp: str | None = None
-    max_records: int = 10_000  # input.maxRecords, S3Loader.scala:118
+    # input.maxRecords (S3Loader.scala:118): maxFilesPerTrigger on the
+    # file source, maxFetchRecordsPerShard on Kinesis
+    max_records: int = 10_000
     # input.customEndpoint (Config.scala:108): a non-AWS Kinesis
     # endpoint (localstack / VPC endpoint), wired by the reference at
     # S3Loader.scala:83 (PROP_KINESIS_ENDPOINT) and KinesisSink.scala:113
@@ -85,13 +87,10 @@ class S3OutputConfig:
     path: str
     compression: Compression = Compression.GZIP
     date_format: str | None = None  # {YYYY}/{MM}-style template (O12)
-    filename_prefix: str | None = None
     # output.s3.customEndpoint (Config.scala:137): non-AWS S3 endpoint
     # (minio/localstack), buildS3Client at KinesisS3Pipeline.scala:54-62;
     # Spark-side this is the fs.s3a.endpoint Hadoop conf (s3a_options)
     custom_endpoint: str | None = None
-    partition_for_purpose: bool = True  # partition SDJ batches by row_type
-    max_timeout_ms: int = 120_000  # retry window; maps to query restart
     # upper bound on the objects one row type gets per flush (before
     # the byteLimit roll). The emitter splits only a row type larger than
     # a fair share of the batch (its bytes over bytes/cores), into at
@@ -117,47 +116,38 @@ class BadOutputConfig:
 @dataclass(frozen=True)
 class OutputConfig:
     s3: S3OutputConfig
-    bad_path: str | None = None  # back-compat shorthand for bad.kind=file
-    bad: BadOutputConfig | None = None  # dead-letter sink (Config.scala:155)
+    # dead-letter sink (Config.scala:155); from_dict also accepts the
+    # native key output.bad_path as shorthand for kind="file"
+    bad: BadOutputConfig | None = None
 
 
 @dataclass(frozen=True)
 class BufferConfig:
     """Config.scala:172 — flush thresholds. In Spark, time_limit_ms is
-    the micro-batch trigger; record_limit caps records per trigger;
-    byte_limit bounds every output object's uncompressed payload via
-    the writer's maxRecordsPerFile roll (sinks/emitter.py)."""
+    the micro-batch trigger; byte_limit bounds every output object's
+    uncompressed payload via the writer's maxRecordsPerFile roll
+    (sinks/emitter.py). The reference's recordLimit has no analogue:
+    the trigger owns batching (config_hocon.REFERENCE_KEYS_WITHOUT_ANALOGUE)."""
 
     byte_limit: int = 2048
-    record_limit: int = 10
     time_limit_ms: int = 5000
 
 
 @dataclass(frozen=True)
 class MonitoringConfig:
-    """Config.scala monitoring — StatsD + Snowplow lifecycle tracking
-    (monitoring.snowplow.{collector,appId} in config.hocon.sample:58)."""
+    """Config.scala monitoring — StatsD + Snowplow lifecycle tracking.
+    Native keys: monitoring.snowplow.{collector,app_id} and
+    monitoring.sentry_dsn; config_hocon maps the reference's
+    snowplow.appId (config.hocon.sample:58) and sentry.dsn onto them."""
 
     statsd_host: str | None = None
     statsd_port: int = 8125
     statsd_prefix: str = "snowplow.s3loader"
     statsd_tags: dict[str, str] = field(default_factory=dict)
-    heartbeat_interval_ms: int = 300_000  # SnowplowTracking.scala:55
     snowplow_collector: str | None = None  # e.g. "http://snplow.acme.ru:80"
     snowplow_app_id: str = "kinesis-s3-spark"
-    # Config.scala:187 Metrics(cloudWatch, ...): in the reference this
-    # toggles KCL's CWMetricsFactory (S3Loader.scala:57) and, when
-    # false, strips the AWS request-metric collector off the bad-stream
-    # Kinesis client (KinesisSink.scala:121). Here it is the
-    # SOURCE-CONNECTOR metrics toggle: a documented no-op on the
-    # file/rate dev sources (no AWS in the harness), honored as
-    # "emit per-request connector metrics" when a real kinesis source/
-    # sink client is configured. Default mirrors the reference's
-    # .getOrElse(false).
-    cloudwatch_metrics: bool = False
-    # Config.scala:180 Sentry(dsn: URI), sample config.hocon.sample's
-    # monitoring.sentry.dsn: crash-reporting DSN. Wired by the reference
-    # at Monitoring.scala:75-77 (Sentry.init(dsn)); here
+    # Config.scala:180 Sentry(dsn: URI): crash-reporting DSN. Wired by
+    # the reference at Monitoring.scala:75-77 (Sentry.init(dsn)); here
     # streaming/monitoring.py:init_sentry at loader startup.
     sentry_dsn: str | None = None
 
@@ -209,13 +199,18 @@ def from_dict(d: dict[str, Any]) -> LoaderConfig:
         # (sinks/emitter.py), never silently.
         if purpose is not Purpose.RAW and not (out.get("bad_path") or out.get("bad")):
             raise ConfigError(
-                "config.output.bad_path is required for purpose "
+                "config.output.bad (or its file shorthand output.bad_path) "
+                "is required for purpose "
                 f"{purpose.value} (bad rows would otherwise be dropped; "
                 "the reference dead-letters them to a Kinesis bad stream)"
             )
         bad_cfg: BadOutputConfig | None = None
-        if out.get("bad") is not None:
-            b = out["bad"]
+        b = out.get("bad")
+        if b is None and out.get("bad_path"):
+            # output.bad_path is the shorthand for a file bad sink; an
+            # explicit output.bad wins when both are given
+            bad_cfg = BadOutputConfig(kind="file", path=out["bad_path"])
+        elif b is not None:
             kind = b.get("kind", "file").strip().lower()
             if kind not in ("file", "kinesis"):
                 raise ConfigError(
@@ -254,19 +249,13 @@ def from_dict(d: dict[str, Any]) -> LoaderConfig:
                     path=_require(s3, "path", "config.output.s3"),
                     compression=Compression[compression],
                     date_format=s3.get("date_format"),
-                    filename_prefix=s3.get("filename_prefix"),
                     custom_endpoint=s3.get("custom_endpoint"),
-                    partition_for_purpose=bool(s3.get("partition_for_purpose", True)),
-                    max_timeout_ms=int(s3.get("max_timeout_ms", 120_000)),
                     writers_per_partition=int(s3.get("writers_per_partition", 4)),
                 ),
-                bad_path=out.get("bad_path")
-                or (bad_cfg.path if bad_cfg and bad_cfg.kind == "file" else None),
                 bad=bad_cfg,
             ),
             buffer=BufferConfig(
                 byte_limit=int(buf.get("byte_limit", 2048)),
-                record_limit=int(buf.get("record_limit", 10)),
                 time_limit_ms=int(buf.get("time_limit_ms", 5000)),
             ),
             monitoring=MonitoringConfig(
@@ -274,14 +263,9 @@ def from_dict(d: dict[str, Any]) -> LoaderConfig:
                 statsd_port=int(mon.get("statsd_port", 8125)),
                 statsd_prefix=mon.get("statsd_prefix", "snowplow.s3loader"),
                 statsd_tags=dict(mon.get("statsd_tags", {})),
-                heartbeat_interval_ms=int(mon.get("heartbeat_interval_ms", 300_000)),
                 snowplow_collector=(mon.get("snowplow") or {}).get("collector"),
-                snowplow_app_id=(mon.get("snowplow") or {}).get(
-                    "app_id", (mon.get("snowplow") or {}).get("appId", "kinesis-s3-spark")
-                ),
-                cloudwatch_metrics=bool(mon.get("cloudwatch_metrics", False)),
-                sentry_dsn=mon.get("sentry_dsn")
-                or (mon.get("sentry") or {}).get("dsn"),
+                snowplow_app_id=(mon.get("snowplow") or {}).get("app_id", "kinesis-s3-spark"),
+                sentry_dsn=mon.get("sentry_dsn"),
             ),
             checkpoint_location=d.get("checkpoint_location"),
         )

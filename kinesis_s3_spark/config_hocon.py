@@ -21,11 +21,13 @@ object merging/duplicate-key concatenation, multi-line strings,
 ``reference_dict_to_native`` then maps the reference's camelCase
 layout (streamName, byteLimit, output.bad.streamName, ...) onto the
 engine's snake_case schema so ``config.load`` accepts either format
-from one entry point.
+from one entry point. Reference keys with no analogue here
+(``REFERENCE_KEYS_WITHOUT_ANALOGUE``) are dropped with one warning.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import re
 from typing import Any
@@ -33,6 +35,20 @@ from typing import Any
 from kinesis_s3_spark.config import ConfigError
 
 _ENV_RE = re.compile(r"\$\{(\w+)\}")
+
+log = logging.getLogger(__name__)
+
+# Reference keys (Config.scala:42-236) with no analogue here, each with
+# the reason. reference_dict_to_native drops them and logs one warning
+# naming those present, so a reference file loads without looking as
+# if they took effect.
+REFERENCE_KEYS_WITHOUT_ANALOGUE = {
+    "input.appName": "the KCL lease table; checkpoint_location holds the offsets",
+    "output.s3.filenamePrefix": "the emitter writes Spark part files, which take no prefix",
+    "output.s3.maxTimeout": "Spark task retries and query restarts own S3 write failures",
+    "buffer.recordLimit": "the processingTime trigger and input.max_records own batching",
+    "monitoring.metrics.cloudWatch": "no KCL or AWS SDK metrics client runs here",
+}
 
 
 class _Parser:
@@ -224,12 +240,23 @@ def looks_like_reference_layout(d: dict) -> bool:
     )
 
 
+def _has_key(d: dict, dotted: str) -> bool:
+    *parents, leaf = dotted.split(".")
+    for k in parents:
+        d = d.get(k) if isinstance(d, dict) else None
+    return isinstance(d, dict) and leaf in d
+
+
 def reference_dict_to_native(d: dict) -> dict:
     """Map the reference's camelCase HOCON layout onto the engine's
-    snake_case schema (Config.scala:42-236 field-by-field). The KCL
-    ``input.appName`` (DynamoDB lease table) has no analogue — the
-    checkpoint location plays that role — so it is accepted and
-    ignored."""
+    snake_case schema (Config.scala:42-236 field-by-field). Keys in
+    REFERENCE_KEYS_WITHOUT_ANALOGUE are dropped with one warning."""
+    ignored = [k for k in REFERENCE_KEYS_WITHOUT_ANALOGUE if _has_key(d, k)]
+    if ignored:
+        log.warning(
+            "ignoring reference config keys with no analogue: %s",
+            "; ".join(f"{k} ({REFERENCE_KEYS_WITHOUT_ANALOGUE[k]})" for k in ignored),
+        )
     inp = d.get("input") or {}
     out = d.get("output") or {}
     s3 = out.get("s3") or {}
@@ -267,8 +294,6 @@ def reference_dict_to_native(d: dict) -> dict:
                     "path": s3.get("path"),
                     "compression": compression,
                     "date_format": s3.get("dateFormat"),
-                    "filename_prefix": s3.get("filenamePrefix"),
-                    "max_timeout_ms": s3.get("maxTimeout"),
                     "custom_endpoint": s3.get("customEndpoint"),
                 }.items()
                 if v is not None
@@ -278,7 +303,6 @@ def reference_dict_to_native(d: dict) -> dict:
             k: v
             for k, v in {
                 "byte_limit": buf.get("byteLimit"),
-                "record_limit": buf.get("recordLimit"),
                 "time_limit_ms": buf.get("timeLimit"),
             }.items()
             if v is not None
@@ -305,11 +329,6 @@ def reference_dict_to_native(d: dict) -> dict:
                 "statsd_tags": statsd.get("tags", {}),
             }
         )
-    # Config.scala:187 metrics.cloudWatch → the connector-metrics
-    # toggle (MonitoringConfig.cloudwatch_metrics; reference default
-    # .getOrElse(false))
-    if "cloudWatch" in (mon.get("metrics") or {}):
-        monitoring["cloudwatch_metrics"] = bool(mon["metrics"]["cloudWatch"])
     # Config.scala:180 Sentry(dsn: URI) — monitoring.sentry.dsn in the
     # shipped sample (config.hocon.sample:64-66); initialized at loader
     # startup (Monitoring.scala:75-77 analogue)

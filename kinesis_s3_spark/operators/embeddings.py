@@ -739,8 +739,9 @@ def _kc_min_dist_arrow(vv: DataFrame, centers: list[list[float]]) -> DataFrame:
 
 
 def kcenter_greedy_frame(spark: SparkSession, vv: DataFrame, k: int) -> DataFrame:
-    """Reusable greedy core over a cached (vec_id, e) frame — exposed
-    for tools/kcenter_scale_experiment.py's crossover measurement.
+    """Reusable greedy core over a cached (vec_id, e) frame; its
+    crossover against the batched core is in SCALE.md, "Batched
+    k-center (r9)".
 
     r12: examined for the Arrow-kernel swap and deliberately KEPT on
     the catalyst LEAST chain — at k=8 each round scores only n·i fold
@@ -789,7 +790,7 @@ def kcenter_greedy_frame(spark: SparkSession, vv: DataFrame, k: int) -> DataFram
 # greedy twin). Quality trade: a pass's ℓ far points can cluster in one
 # far region; the driver-side re-greedy rejects the near-duplicates,
 # and the corpus_radius column reports the realized coverage so the
-# greedy-vs-batched gap is measurable (tools/kcenter_scale_experiment).
+# greedy-vs-batched gap is measurable (SCALE.md, "Batched k-center (r9)").
 
 KB_CENTERS = 16
 KB_L = 8
@@ -912,8 +913,8 @@ def kcenter_batched_frame(
     l: int = KB_L,
     passes: int = KB_PASSES,
 ) -> DataFrame:
-    """Reusable core over a cached (vec_id, e) frame — exposed for
-    tools/kcenter_scale_experiment.py's crossover measurement."""
+    """Reusable core over a cached (vec_id, e) frame; its crossover
+    against the greedy core is in SCALE.md, "Batched k-center (r9)"."""
     seed = vv.filter(F.col("vec_id") == 0).select("vec_id", "e").collect()[0]
     cand: list[tuple[int, list[float]]] = [(0, [float(x) for x in seed["e"]])]
     for p in range(passes):

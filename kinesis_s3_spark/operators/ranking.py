@@ -349,7 +349,6 @@ def global_row_number_tiesafe(
     out_col: str,
     nbuckets: int | None = None,
     tiebreak_str: Column | None = None,
-    persist_input: bool = True,
 ) -> DataFrame:
     """``ROW_NUMBER() OVER (ORDER BY key_order, order_cols)`` for a
     LOW-CARDINALITY leading key (the tie-degenerate case of
@@ -397,14 +396,11 @@ def global_row_number_tiesafe(
         # the materializing pass and the main query a cache read —
         # upstream executes once, as in the lazy crossJoin form. Every
         # production call site ranks a REDUCED frame (vocabulary, key
-        # histogram), so the cached frame is aggregation-sized. For a
-        # raw DATA-sized frame whose upstream is already cheap to
-        # rescan (a checkpoint, a bare parquet scan), the persist is
-        # pure overhead — measured ~2 GB of storage-memory churn per
-        # call at 30M rows (tools/rank_scale_experiment.py) — pass
-        # ``persist_input=False`` there and let the scans repeat.
-        if persist_input:
-            df = df.persist()
+        # histogram), so the cached frame is aggregation-sized. On a
+        # raw DATA-sized frame the persist churns storage memory
+        # (~2 GB per call at 30M rows; SCALE.md, "LCP-stripped string
+        # tiebreakers (r9)").
+        df = df.persist()
         d, b1, b2, pcol = _two_level_buckets_lcp(
             df, key_bucket, tiebreak_str, out_col, n
         )

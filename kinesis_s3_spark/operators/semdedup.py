@@ -450,12 +450,13 @@ def dedup_semantic_k32(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cost constant only by growing k linearly — and flat Lloyd assignment
 # costs n·k distance evaluations, so at 100× corpus growth the ASSIGN
 # stage becomes the cliff the pair stage used to be (measured in
-# tools/scale100_experiment.py: flat k=32 at 100× embeddings leaves
-# Σ|c|²/2 ≈ 6.5e8 candidate pairs, and scaling k to ~3200 would cost
-# 6.4e8 full-dim assign evaluations instead). The standard fix
-# (faiss-style coarse quantizer; Abbas et al. 2023 §3 cluster with
-# faiss) is HIERARCHICAL k-means: √k coarse cells, then √k fine cells
-# WITHIN each coarse cell — effective k cells at n·2√k assign cost.
+# SCALE.md, "100× embeddings experiment (r8)": flat k=32 at 100×
+# embeddings leaves Σ|c|²/2 ≈ 6.5e8 candidate pairs, and scaling k to
+# ~3200 would cost 6.4e8 full-dim assign evaluations instead). The
+# standard fix (faiss-style coarse quantizer; Abbas et al. 2023 §3
+# cluster with faiss) is HIERARCHICAL k-means: √k coarse cells, then √k
+# fine cells WITHIN each coarse cell — effective k cells at n·2√k assign
+# cost.
 # Both levels target cluster size ~TARGET_CELL, so k tracks n with no
 # hand-set constant: kk = ⌈√(n / TARGET_CELL)⌉ per level.
 #
@@ -694,12 +695,12 @@ def dedup_semantic_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup on a HIERARCHICAL k-means blocking (coarse √k cells ×
     fine √k sub-cells, k = n/64 tracking the corpus) — the k∝n arm
     that survives 100× corpus growth: flat k∝n assignment costs n·k
-    distance evaluations (the cliff tools/scale100_experiment.py
-    measures), hierarchical costs n·2√k while keeping the pair stage
-    pair-bound at Σ|cell|²/2 ≈ n·64/2. Same pruning rule and verdict
-    schema as dedup_semantic (keep unless a same-cell lower-id
-    neighbor at rounded cosine ≥ 0.85 exists), with both blocking
-    levels exposed.
+    distance evaluations (the cliff SCALE.md's "100× embeddings
+    experiment (r8)" measures), hierarchical costs n·2√k while keeping
+    the pair stage pair-bound at Σ|cell|²/2 ≈ n·64/2. Same pruning
+    rule and verdict schema as dedup_semantic (keep unless a same-cell
+    lower-id neighbor at rounded cosine ≥ 0.85 exists), with both
+    blocking levels exposed.
 
     Plan: coarse level = the dedup_semantic Lloyd loop (broadcast
     centroid frame, k×dim driver collects); fine level = GROUPED Lloyd

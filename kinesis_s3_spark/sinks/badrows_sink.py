@@ -176,11 +176,9 @@ def build_bad_sink(cfg) -> KinesisBadRowSink | FileBadRowSink | None:
     """Construct the configured dead-letter sink once at startup (so
     the Kinesis probe runs before the query starts, matching the
     eager badSink construction at S3Loader.scala:39)."""
-    bad = getattr(cfg.output, "bad", None)
-    if bad is not None and bad.kind == "kinesis":
+    bad = cfg.output.bad
+    if bad is None:
+        return None
+    if bad.kind == "kinesis":
         return KinesisBadRowSink(stream_name=bad.stream_name, region=bad.region)
-    if bad is not None and bad.kind == "file" and bad.path:
-        return FileBadRowSink(path=bad.path)
-    if cfg.output.bad_path:
-        return FileBadRowSink(path=cfg.output.bad_path)
-    return None
+    return FileBadRowSink(path=bad.path)

@@ -103,7 +103,7 @@ def _with_result_columns(df: DataFrame, cfg: LoaderConfig) -> DataFrame:
     target = "binary" if cfg.purpose is Purpose.RAW else "string"
     value = F.col("value").cast(target)
     out = df.withColumn("value", value).withColumn("is_bad", F.col("value").isNull())
-    if cfg.purpose is Purpose.SELF_DESCRIBING and cfg.output.s3.partition_for_purpose:
+    if cfg.purpose is Purpose.SELF_DESCRIBING:
         out = out.withColumn(
             ROW_TYPE_COL, row_type_col(F.col("value"), is_failed=F.col("is_bad"))
         )
@@ -339,7 +339,7 @@ def emit(
                 # Output(s3, bad)); without one, failed records are data
                 # loss — make it loud, never silent
                 logger.warning(
-                    "DROPPING %d bad rows in batch %d: output.bad_path is "
+                    "DROPPING %d bad rows in batch %d: output.bad is "
                     "not configured (the reference dead-letters these to a "
                     "Kinesis bad stream)",
                     n_bad,

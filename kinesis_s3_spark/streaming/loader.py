@@ -6,11 +6,13 @@ Reference → Spark mapping (SURVEY §3.2):
 - KCL worker + shard leases in DynamoDB → Structured Streaming query +
   ``checkpointLocation`` WAL (offsets/commits);
 - BasicMemoryBuffer(byte|record|time limit) → micro-batch trigger:
-  ``processingTime=buffer.time_limit_ms`` approximates timeLimit,
-  ``maxFilesPerTrigger``/``maxRecordsPerTrigger`` approximate
-  recordLimit; byteLimit has no Spark knob (documented semantic
-  difference, SURVEY §7 risk 1 — same records land, batch boundaries
-  may differ);
+  ``processingTime=buffer.time_limit_ms`` approximates timeLimit;
+  ``input.max_records`` caps each trigger's input (``maxFilesPerTrigger``
+  on the file source, ``maxFetchRecordsPerShard`` on Kinesis), and the
+  reference's recordLimit has no analogue; byteLimit bounds each output
+  object through the writer's file roll (sinks/emitter.py), not the
+  batch (documented semantic difference, SURVEY §7 risk 1 — same
+  records land, batch boundaries may differ);
 - emitter retry-forever-then-halt → task retries + query restart
   policy (exactly-once file sink).
 
@@ -55,14 +57,6 @@ def build_stream(spark: SparkSession, cfg: LoaderConfig) -> DataFrame:
         if "value" not in df.columns:
             raise ValueError("input stream must carry a 'value' column")
         return df
-    if inp.kind == "rate":
-        # dev harness: synthesize records at a fixed rate
-        return (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", inp.max_records)
-            .load()
-            .select(F.col("value").cast("string").alias("value"))
-        )
     if inp.kind == "kinesis":
         # requires a kinesis connector on the classpath
         df = (
@@ -200,9 +194,7 @@ def run_loader(
         writer = writer.option("checkpointLocation", cfg.checkpoint_location)
     if tracker is None and cfg.monitoring.snowplow_collector:
         tracker = SnowplowTracker(
-            cfg.monitoring.snowplow_collector,
-            cfg.monitoring.snowplow_app_id,
-            heartbeat_interval_ms=cfg.monitoring.heartbeat_interval_ms,
+            cfg.monitoring.snowplow_collector, cfg.monitoring.snowplow_app_id
         )
     if tracker is None:
         return writer.start()

@@ -81,7 +81,6 @@ class SnowplowTracker:
         send: Callable[[dict], None] | None = None,
         now_ms: Callable[[], int] | None = None,
         sleep: Callable[[float], None] | None = None,
-        heartbeat_interval_ms: int = HEARTBEAT_INTERVAL_MS,
     ) -> None:
         if send is None:
             if not collector_uri:
@@ -94,7 +93,6 @@ class SnowplowTracker:
         # the default sleep wakes on stop(), so the heartbeat thread
         # ends with the tracker instead of up to one interval later
         self._sleep = sleep or self._stop.wait
-        self.heartbeat_interval_ms = heartbeat_interval_ms
         self._heartbeat_thread: threading.Thread | None = None
 
     # -- wire format -------------------------------------------------------
@@ -139,7 +137,7 @@ class SnowplowTracker:
         self.track("app_shutdown", None)
 
     def app_heartbeat(self) -> None:
-        self.track("app_heartbeat", {"interval": self.heartbeat_interval_ms})
+        self.track("app_heartbeat", {"interval": HEARTBEAT_INTERVAL_MS})
 
     def storage_write_failed(
         self,
@@ -173,7 +171,7 @@ class SnowplowTracker:
         def beat() -> None:
             while not self._stop.is_set():
                 self.app_heartbeat()
-                self._sleep(self.heartbeat_interval_ms / 1000.0)
+                self._sleep(HEARTBEAT_INTERVAL_MS / 1000.0)
 
         self._heartbeat_thread = threading.Thread(
             target=beat, name="snowplow-heartbeat", daemon=True

@@ -72,7 +72,7 @@ def test_bpe_tiebreak_lexicographic(spark):
 def _trigram_docs(spark, sf_dir="/root/testdata/sf0.001"):
     """High-vocabulary corpus derived from documents (word-trigram
     pseudo-words) — the 1k-merge experiment's input shape
-    (tools/bpe_scale_experiment.py)."""
+    (SCALE.md, "BPE at a production merge budget (r6)")."""
     from pyspark.sql import functions as F
 
     from kinesis_s3_spark.sources.tables import load_table

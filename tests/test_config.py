@@ -8,6 +8,7 @@ import json
 import pytest
 
 from kinesis_s3_spark.config import (
+    BadOutputConfig,
     Compression,
     ConfigError,
     InitialPosition,
@@ -30,12 +31,10 @@ FULL = {
             "path": "s3a://bucket/prefix",
             "compression": "GZIP",
             "date_format": "{YYYY}/{MM}/{dd}",
-            "filename_prefix": "loader",
-            "max_timeout_ms": 2000,
         },
         "bad_path": "s3a://bucket/bad",
     },
-    "buffer": {"byte_limit": 2048, "record_limit": 10, "time_limit_ms": 5000},
+    "buffer": {"byte_limit": 2048, "time_limit_ms": 5000},
     "monitoring": {
         "statsd_host": "localhost",
         "statsd_port": 8125,
@@ -53,7 +52,7 @@ def test_full_decode():
     assert cfg.input.max_records == 10
     assert cfg.output.s3.compression is Compression.GZIP
     assert cfg.output.s3.date_format == "{YYYY}/{MM}/{dd}"
-    assert cfg.output.bad_path == "s3a://bucket/bad"
+    assert cfg.output.bad == BadOutputConfig(kind="file", path="s3a://bucket/bad")
     assert cfg.buffer.byte_limit == 2048
     assert cfg.monitoring.statsd_tags == {"app": "s3-loader"}
 
@@ -67,7 +66,6 @@ def test_defaults():
         }
     )
     assert cfg.purpose is Purpose.RAW
-    assert cfg.buffer.record_limit == 10  # config.hocon.sample:50 default
     assert cfg.buffer.time_limit_ms == 5000
     assert cfg.monitoring.statsd_host is None
 
@@ -157,3 +155,33 @@ def test_cli_countmin_flag_builds_accumulator(tmp_path, monkeypatch):
     assert isinstance(cms, CountMinAccumulator)
     assert cms._state.path.startswith(str(state))
     assert seen["dedupe_watermark"] == "2 hours"
+
+
+def test_every_config_field_is_read():
+    """Each field of the config dataclasses is read, by name, as an
+    attribute somewhere in the package outside the config modules: a
+    field that nothing reads is accepted from a config file and then
+    silently ignored. Spark-free (parses the sources)."""
+    import ast
+    import dataclasses
+    from pathlib import Path
+
+    import kinesis_s3_spark.config as config
+
+    pkg = Path(config.__file__).parent
+    config_modules = {pkg / "config.py", pkg / "config_hocon.py"}
+    read: set[str] = set()
+    for path in pkg.rglob("*.py"):
+        if path in config_modules:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                read.add(node.attr)
+    unread = [
+        f"{cls.__name__}.{f.name}"
+        for cls in vars(config).values()
+        if dataclasses.is_dataclass(cls) and cls.__module__ == config.__name__
+        for f in dataclasses.fields(cls)
+        if f.name not in read
+    ]
+    assert not unread, f"config fields that nothing reads: {unread}"

@@ -177,7 +177,6 @@ def _indexed_cfg(tmp_path):
                 "s3": {
                     "path": str(tmp_path / "out"),
                     "compression": "GZIP_INDEXED",
-                    "partition_for_purpose": False,
                     "writers_per_partition": 1,
                 },
                 "bad_path": str(tmp_path / "bad"),

@@ -5,7 +5,6 @@ a fake clock (no sleeping, no network)."""
 from __future__ import annotations
 
 import json
-import threading
 
 from kinesis_s3_spark.streaming.tracking import (
     HEARTBEAT_INTERVAL_MS,
@@ -70,28 +69,26 @@ def test_storage_write_failed_payload():
 def test_heartbeat_ticks_on_fake_clock():
     """start() → app_initialized + heartbeat thread; the heartbeat must
     tick every interval INDEPENDENT of batch progress. A fake sleep
-    counts ticks and releases the test after 3 beats."""
-    done = threading.Event()
+    counts ticks and stops the tracker after 3 beats, which ends the
+    heartbeat loop."""
     beats: list[float] = []
 
     def fake_sleep(sec: float) -> None:
         beats.append(sec)
-        if len(beats) >= 3:
-            done.set()
-            raise SystemExit  # end the daemon loop deterministically
+        if len(beats) == 3:
+            t.stop()
 
     t, sent = _capture_tracker(sleep=fake_sleep)
     t.start()
-    assert done.wait(timeout=5.0)
+    t._heartbeat_thread.join(timeout=5.0)
+    assert not t._heartbeat_thread.is_alive()
 
     assert beats == [300.0, 300.0, 300.0]  # SnowplowTracking.scala:55
     inners = [_inner(p) for p in sent]
     assert inners[0]["schema"].endswith("/app_initialized/jsonschema/1-0-0")
     hearts = [i for i in inners if i["schema"].endswith("/app_heartbeat/jsonschema/1-0-0")]
-    assert len(hearts) >= 3
+    assert len(hearts) == 3
     assert all(h["data"] == {"interval": HEARTBEAT_INTERVAL_MS} for h in hearts)
-
-    t.stop()
     assert _inner(sent[-1])["schema"].endswith("/app_shutdown/jsonschema/1-0-0")
 
 
@@ -104,7 +101,7 @@ def test_config_plumbs_snowplow_section():
             "input": {"stream_name": "t"},
             "output": {"s3": {"path": "/tmp/x"}},
             "monitoring": {
-                "snowplow": {"collector": "http://snplow.acme.ru:80", "appId": "angry-birds"}
+                "snowplow": {"collector": "http://snplow.acme.ru:80", "app_id": "angry-birds"}
             },
         }
     )
