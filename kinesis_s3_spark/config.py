@@ -10,10 +10,14 @@ error message naming the field and allowed values).
 from __future__ import annotations
 
 import json
+import logging
 from dataclasses import dataclass, field
 from enum import Enum
 from pathlib import Path
 from typing import Any
+
+
+log = logging.getLogger(__name__)
 
 
 class ConfigError(ValueError):
@@ -168,7 +172,54 @@ def _require(d: dict, key: str, ctx: str) -> Any:
     return d[key]
 
 
+class _Reads(dict):
+    """A config mapping that records the dotted path of every key looked
+    up in it, and hands out its nested mappings wrapped the same way."""
+
+    def __init__(self, d: dict, seen: set[str], path: str = ""):
+        super().__init__(d)
+        self._seen, self._path = seen, path
+
+    def _wrap(self, key: str, v: Any) -> Any:
+        return _Reads(v, self._seen, f"{self._path}{key}.") if isinstance(v, dict) else v
+
+    def __getitem__(self, key: str) -> Any:
+        self._seen.add(self._path + key)
+        return self._wrap(key, super().__getitem__(key))
+
+    def get(self, key: str, default: Any = None) -> Any:
+        self._seen.add(self._path + key)
+        return self._wrap(key, super().get(key, default))
+
+
+def _unread(d: dict, seen: set[str], path: str = "") -> list[str]:
+    """Dotted keys of ``d`` that were never looked up. A mapping read
+    whole (``monitoring.statsd_tags``) has no key of its own looked up,
+    and its keys are not reported."""
+    keys = []
+    for k, v in d.items():
+        p = f"{path}{k}"
+        if p not in seen:
+            keys.append(p)
+        elif isinstance(v, dict) and any(s.startswith(p + ".") for s in seen):
+            keys.extend(_unread(v, seen, p + "."))
+    return keys
+
+
 def from_dict(d: dict[str, Any]) -> LoaderConfig:
+    """Decode a native config mapping. Keys the decoder never looks at
+    are ignored, and logged in one warning."""
+    if not isinstance(d, dict):
+        raise ConfigError(f"config must be a mapping, not {type(d).__name__}")
+    seen: set[str] = set()
+    cfg = _decode(_Reads(d, seen))
+    unread = _unread(d, seen)
+    if unread:
+        log.warning("ignoring config keys the loader does not read: %s", ", ".join(unread))
+    return cfg
+
+
+def _decode(d: dict[str, Any]) -> LoaderConfig:
     try:
         purpose = Purpose.parse(_require(d, "purpose", "config"))
         inp = _require(d, "input", "config")

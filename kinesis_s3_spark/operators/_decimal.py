@@ -7,9 +7,15 @@ driver's correctness-gate order — see __spark_entry__.py).
 Pattern: exact decimal accumulation, then ONE cast to double, so the
 result does not depend on partition/addition order and bit-matches the
 DuckDB oracle's CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE).
+
+``to_decimal`` and ``round_half_up`` are the driver-side mirrors of
+Spark's double → decimal cast and ``round(double, scale)``, for
+operators that finish a small computation in Python.
 """
 
 from __future__ import annotations
+
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -37,3 +43,17 @@ def DSUM(expr: str) -> str:
 
 def DAVG(expr: str) -> str:
     return f"(CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS DOUBLE) / COUNT({expr}))"
+
+
+def to_decimal(x: float, scale: int) -> Decimal:
+    """CAST(x AS DECIMAL(p, scale)) of a finite double, as Spark does
+    it: Catalyst takes ``BigDecimal.valueOf(x)``, the double's shortest
+    decimal repr (Python's ``repr``), and rounds it HALF_UP."""
+    return Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), rounding=ROUND_HALF_UP)
+
+
+def round_half_up(x: float, scale: int) -> float:
+    """Spark's ``round(x, scale)`` of a finite double, which rounds the
+    same decimal HALF_UP (Python's ``round`` rounds half to even). A
+    BigDecimal has no negative zero, so ``+ 0.0`` turns -0.0 into 0.0."""
+    return float(to_decimal(x, scale)) + 0.0

@@ -659,10 +659,10 @@ def resolve_labels_star(
     count + exceptAll probe on the cached frames. ``rounds_out``, if
     given, receives the number of rounds executed (for the
     convergence-bound test)."""
-    # localCheckpoint per round (same pattern as graph_pagerank):
-    # without it the logical plan doubles every round — two joins +
-    # unions + distinct stacked ~log n deep blows the driver heap in
-    # Catalyst long before the executors see any data.
+    # localCheckpoint per round (the Pregel materialize-per-superstep
+    # pattern): without it the logical plan doubles every round — two
+    # joins + unions + distinct stacked ~log n deep blows the driver
+    # heap in Catalyst long before the executors see any data.
     e = (
         pairs.filter(F.col("d1") != F.col("d2"))
         .select(

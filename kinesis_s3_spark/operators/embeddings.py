@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kinesis_s3_spark.operators._decimal import round_half_up
 from kinesis_s3_spark.operators.registry import query
 from kinesis_s3_spark.sources.tables import load_table
 
@@ -937,21 +938,12 @@ def kcenter_batched_frame(
     # and a Spark cross join over 33 rows cost 8.8 s of plan/codegen
     # for ~1k pairs. Bit-exact to the engines: dots accumulate
     # left-to-right in float64 (the _dot / list_dot_product fold
-    # order), and _r4 mirrors Spark's F.round exactly — Catalyst
-    # rounds BigDecimal.valueOf(double) (= the double's SHORTEST
-    # DECIMAL REPR) HALF_UP, which is Decimal(repr(x)) + ROUND_HALF_UP
-    # in Python. The re-greedy below only COMPARES these values, so
-    # the oracle's identical greedy over DuckDB's rounded matrix picks
-    # the same centers (4 dp convention). At k ≳ 10⁴ (≈2k·dim² pair
+    # order), and round_half_up mirrors Spark's F.round exactly. The
+    # re-greedy below only COMPARES these values, so the oracle's
+    # identical greedy over DuckDB's rounded matrix picks the same
+    # centers (4 dp convention). At k ≳ 10⁴ (≈2k·dim² pair
     # dots) this moves to blocked numpy with a canonical summation
     # order — documented escalation, not needed at gated sizes.
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def _r4(x: float) -> float:
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
-        )
-
     def _pydot(a: list[float], b: list[float]) -> float:
         acc = 0.0
         for xa, xb in zip(a, b):
@@ -960,7 +952,7 @@ def kcenter_batched_frame(
 
     ee_by_id = {i: _pydot(e, e) for i, e in cand}
     D = {
-        (i, j): _r4(ee_by_id[i] - 2 * _pydot(ei, ej) + ee_by_id[j])
+        (i, j): round_half_up(ee_by_id[i] - 2 * _pydot(ei, ej) + ee_by_id[j], 4)
         for i, ei in cand
         for j, ej in cand
     }

@@ -1,23 +1,25 @@
 """Graph analytics over the event stream (north-star extension;
 BASELINE.json): PageRank on the event-type transition graph — the
 iterative fixed-point algorithm pattern (alongside emb_kmeans and
-emb_power_iteration) expressed as joins over an edge frame.
+emb_power_iteration).
 
 The graph: nodes = event types, edges = per-user consecutive-event
 transitions weighted by count (the events_transition_matrix bigram
-frame). Small here, but the PLAN is the one that scales: each
-iteration is edges ⋈ ranks (ranks broadcast — they are |V|-sized) →
-groupBy(dst) sum — the textbook distributed PageRank step, linear in
-|E| per round with a single uniform-key shuffle. Dangling-node mass
-is redistributed uniformly (the standard correction); it is summed in
-the same aggregate as the per-node sums (see graph_pagerank).
+frame). Spark does the corpus-sized part: one (user_id) window pass
+and one (src, dst) pair count. What it returns is bounded by the
+event types V, at most |V|·(|V|+1) rows whatever the corpus size, so
+the rounds themselves run on the driver: a graph this small iterates
+fastest on one thread (McSherry et al., "Scalability! But at what
+COST?", HotOS 2015), and a distributed round would be all
+coordination. Dangling-node mass is redistributed uniformly (the
+standard correction).
 
 Determinism (registry rules): per-edge contributions are rounded to
 14 dp and summed as DECIMAL(28,14) so addition order cannot move the
 result; each iteration's rank vector is re-rounded to 14 dp, keeping
-Spark and DuckDB bit-locked round by round (power-iteration
+the driver and DuckDB bit-locked round by round (power-iteration
 precedent); the division n/out and products are IEEE-identical on
-identical doubles.
+identical doubles, and ``_decimal.round_half_up`` is Spark's round.
 
 Reference parity note: the reference (snowplow/kinesis-s3) has no
 query surface (SURVEY.md §2) — this extends the engine's iterative-
@@ -26,9 +28,13 @@ algorithm repertoire for behavioral/link analysis.
 
 from __future__ import annotations
 
+from collections import Counter, defaultdict
+from decimal import Decimal
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kinesis_s3_spark.operators._decimal import round_half_up, to_decimal
 from kinesis_s3_spark.operators.registry import query
 from kinesis_s3_spark.sources.tables import load_table
 
@@ -121,112 +127,49 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle unrolls every iteration in one WITH chain —
     bit-exact per round via the module's rounding discipline.
 
-    The transition frame is built once and materialized with an eager
-    localCheckpoint. It holds three kinds of rows ``(src, dst,
-    dangling, w)``:
-    - one per edge, ``w = n / out_n`` of its source;
-    - one ``(v, v, false, 0.0)`` per node, so that every node is a
-      group of the round's aggregate, incoming edges or not;
-    - one ``(u, NULL, true, 1.0)`` per dangling node ``u`` (no outgoing
-      edge), so the dangling mass falls out of the same aggregate:
-      ``round(r * 1.0, 14) = round(r, 14)``, the oracle's term.
-    The DECIMAL(28,14) sums do not depend on row order, and a zero
-    contribution adds nothing, so every sum is the oracle's.
+    Spark counts the ``(src, dst)`` transition pairs, dst NULL
+    included, and the counts are collected: at most |V|·(|V|+1) rows
+    for the event types V, however large the corpus. The driver then
+    runs the rounds with the oracle's semantics:
+    - nodes are every distinct ``src``, NULL included;
+    - edges are the pairs with non-NULL ``src`` and ``dst``, weighted
+      ``w = n / out_n`` (the oracle joins on ``src = v``, so a NULL
+      node sends nothing along its edges);
+    - the dangling nodes are NULL and every node with no edge out;
+    - each contribution is ``round(r * w, 14)`` summed exactly as
+      DECIMAL(28,14) and then made a double, the dangling mass the
+      same sum of ``round(r, 14)``;
+    - ``r' = round((1 - d)/N + d * (s + dang/N), 14)``.
+    An empty input has no nodes and gives an empty result."""
+    pairs = _transitions(spark, sf_dir).groupBy("src", "dst").count().collect()
+    nodes = {src for src, _, _ in pairs}
+    edges = [(src, dst, n) for src, dst, n in pairs if src is not None and dst is not None]
+    out_n: Counter = Counter()
+    for src, _, n in edges:
+        out_n[src] += n
+    dangling = [v for v in nodes if v not in out_n]  # NULL is never a key
+    nn = float(len(nodes))
 
-    Each round is one broadcast join of the rank vector into the
-    frame, one aggregate on ``(dst, dangling)`` and one eager
-    localCheckpoint: three jobs (broadcast, shuffle map, result). The
-    aggregate's |V|+1 rows are coalesced to one partition, where the
-    node count N and the dangling mass are window totals that need no
-    exchange; N stays in the plan, so an empty input yields an empty
-    result rather than a division by zero. The checkpoint cuts the
-    lineage per round, the materialize-per-superstep contract
-    GraphX/Pregel uses; without it, round k would re-plan all k-1
-    rounds before it. 100 TB: the edge frame scales with the corpus
-    and each round stays one map-side combined shuffle on dst;
-    node-sized frames never exceed |V|."""
-    # one row per (src, dst) pair, dst NULL included, so every node
-    # (every event type, NULL too) is some row's src
-    by_src = Window.partitionBy("src")
-    src, dst, n, out_n, first = map(F.col, ("src", "dst", "n", "out_n", "first"))
-    pairs = (
-        _transitions(spark, sf_dir)
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("n"))
-        .select(
-            "*",
-            F.sum(F.when(dst.isNotNull(), n)).over(by_src).alias("out_n"),
-            (F.row_number().over(by_src.orderBy("dst")) == 1).alias("first"),
-        )
-    )
+    def contrib(r: float, w: float) -> Decimal:
+        return to_decimal(round_half_up(r * w, _RDP), _RDP)
 
-    def row(to, dang: bool, w):
-        return F.struct(
-            src.alias("src"),
-            to.alias("dst"),
-            F.lit(dang).alias("dangling"),
-            w.alias("w"),
-        )
-
-    # the oracle joins on src = v: a NULL node sends nothing along its
-    # edges and counts as dangling
-    kinds = F.array(
-        F.when(
-            src.isNotNull() & dst.isNotNull(),
-            row(dst, False, n.cast("double") / out_n.cast("double")),
-        ),
-        F.when(first, row(src, False, F.lit(0.0))),
-        F.when(
-            first & (src.isNull() | out_n.isNull()),
-            row(F.lit(None).cast("string"), True, F.lit(1.0)),
-        ),
-    )
-    trans = (
-        pairs.select(F.explode(F.filter(kinds, lambda k: k.isNotNull())).alias("t"))
-        .select("t.*")
-        .localCheckpoint(eager=True)
-    )
-
-    every = Window.partitionBy()  # over one partition of |V| + 1 rows
-    dangling = F.col("dangling")
-    nodes_n = F.count(F.when(~dangling, 1)).over(every).cast("double")
-    dang_s = F.coalesce(F.max(F.when(dangling, F.col("s"))).over(every), F.lit(0.0))
-    dec = f"decimal(28,{_RDP})"
-    ranks = (
-        trans.filter(F.col("w") == 0.0)  # the node rows
-        .coalesce(1)
-        .select(
-            F.col("src").alias("v"),
-            F.round(F.lit(1.0) / F.count("*").over(every).cast("double"), _RDP).alias("r"),
-        )
-    )
+    ranks = {v: round_half_up(1.0 / nn, _RDP) for v in nodes}
     for _ in range(PR_ITERS):
-        ranks = (
-            trans.join(F.broadcast(ranks), trans.src.eqNullSafe(ranks.v))
-            .groupBy("dst", "dangling")
-            .agg(
-                F.sum(F.round(F.col("r") * F.col("w"), _RDP).cast(dec))
-                .cast("double")
-                .alias("s")
+        s: defaultdict = defaultdict(Decimal)
+        for src, dst, n in edges:
+            s[dst] += contrib(ranks[src], float(n) / float(out_n[src]))
+        dang = float(sum(contrib(ranks[v], 1.0) for v in dangling))
+        ranks = {
+            v: round_half_up(
+                (1.0 - PR_DAMPING) / nn + PR_DAMPING * (float(s[v]) + dang / nn), _RDP
             )
-            .coalesce(1)
-            .select("dst", "dangling", "s", nodes_n.alias("nn"), dang_s.alias("dang_s"))
-            .filter(~dangling)
-            .select(
-                F.col("dst").alias("v"),
-                F.round(
-                    F.lit((1.0 - PR_DAMPING)) / F.col("nn")
-                    + F.lit(PR_DAMPING) * (F.col("s") + F.col("dang_s") / F.col("nn")),
-                    _RDP,
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    win = Window.orderBy(F.col("r").desc(), "v")
-    return ranks.select(
-        F.col("v").alias("event_type"),
-        F.round("r", 6).alias("pagerank"),
-        F.row_number().over(win).alias("rank"),
+            for v in nodes
+        }
+    # ORDER BY r DESC, v: Spark sorts NULL first
+    order = sorted(ranks, key=lambda v: (-ranks[v], v is not None, v or ""))
+    return spark.createDataFrame(
+        [(v, round_half_up(ranks[v], 6), i) for i, v in enumerate(order, 1)],
+        "event_type string, pagerank double, rank int not null",
     )
 
 
@@ -274,6 +217,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-degree vertices to the wedge tails, and every join keys on
     vertex ids."""
     edges = transition_edges(spark, sf_dir)
+    # not cached: the three uses of und plan identically, so
+    # ReuseExchange runs its shuffles once, and a session-lifetime
+    # cache would keep answering after events.parquet is rewritten
     und = (
         edges.filter(F.col("src") != F.col("dst"))
         .select(
@@ -281,7 +227,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        .cache()
     )
     e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
     tri = (

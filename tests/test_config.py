@@ -3,7 +3,10 @@ defaults, and human-readable errors on invalid input."""
 
 from __future__ import annotations
 
+import ast
 import json
+import logging
+from pathlib import Path
 
 import pytest
 
@@ -104,6 +107,53 @@ def test_load_file(tmp_path):
 
     with pytest.raises(ConfigError, match="does not exist"):
         load(tmp_path / "missing.json")
+
+
+def test_unread_key_is_warned(caplog):
+    d = json.loads(json.dumps(FULL))
+    d["buffer"]["byte_limt"] = 1024
+    with caplog.at_level(logging.WARNING):
+        cfg = from_dict(d)
+    (warning,) = [r for r in caplog.records if r.levelno >= logging.WARNING]
+    assert "buffer.byte_limt" in warning.getMessage()
+    assert "statsd_tags" not in warning.getMessage()  # read whole
+    assert cfg.buffer.byte_limit == 2048
+
+
+def _bench_configs() -> list[dict]:
+    """The mapping literal of every from_dict call in the benchmark's
+    workloads, evaluated with a stand-in (a path, a port, a trigger
+    interval) for each name it reads at run time."""
+
+    class Stand(int):
+        def __getitem__(self, _):
+            return self
+
+        def __getattr__(self, _):
+            return self
+
+    class Names(dict):
+        def __missing__(self, _):
+            return Stand(1)
+
+    root = Path(__file__).resolve().parents[1] / "perfbench"
+    found = []
+    for name in ("emit_batch.py", "stream_open_loop.py"):
+        for node in ast.walk(ast.parse((root / name).read_text())):
+            if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "from_dict":
+                code = compile(ast.Expression(node.args[0]), name, "eval")
+                found.append(eval(code, {"__builtins__": {}}, Names()))
+    assert len(found) == 2
+    return found
+
+
+def test_shipped_configs_load_without_warning(caplog):
+    sample = Path(__file__).resolve().parents[1] / "config" / "config.sample.json"
+    with caplog.at_level(logging.WARNING):
+        load(sample)
+        for d in _bench_configs():
+            from_dict(d)
+    assert not [r for r in caplog.records if r.levelno >= logging.WARNING]
 
 
 def test_cli_bad_config_exits_1(tmp_path, capsys):

@@ -253,16 +253,14 @@ def test_kc_min_dist_arrow_equals_batch(spark):
 
 
 def test_kcenter_driver_round_matches_spark_round():
-    """_r4-style driver rounding must mirror Catalyst's F.round
-    (BigDecimal.valueOf HALF_UP on the double's shortest repr) on
-    adversarial values — the batched k-center re-greedy compares
-    driver-rounded against oracle-rounded values."""
-    from decimal import ROUND_HALF_UP, Decimal
+    """Driver rounding must mirror Catalyst's F.round (BigDecimal.valueOf
+    HALF_UP on the double's shortest repr) on adversarial values — the
+    batched k-center re-greedy compares driver-rounded against
+    oracle-rounded values."""
+    from kinesis_s3_spark.operators._decimal import round_half_up
 
     def r4(x: float) -> float:
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
-        )
+        return round_half_up(x, 4)
 
     # known HALF_UP behaviors incl. repr-boundary doubles
     assert r4(0.00005) == 0.0001  # repr('5e-05') rounds up
@@ -292,10 +290,9 @@ def test_lloyd_round_means_are_exact_decimal(spark):
     round's centroid means must equal the exact DECIMAL(38,12) mean of
     the assigned vectors — HALF_UP cast per element, exact decimal sum
     (order-free), double divide, ROUND 6 — for every dim."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     from pyspark.sql import functions as F
 
+    from kinesis_s3_spark.operators._decimal import to_decimal
     from kinesis_s3_spark.operators.embeddings import _dot, lloyd_centroids
 
     vecs = {
@@ -328,14 +325,10 @@ def test_lloyd_round_means_are_exact_decimal(spark):
     assign = {
         vid: min(seeds, key=lambda c: (d2(v, seeds[c]), c)) for vid, v in vecs.items()
     }
-    q12 = Decimal("1e-12")
     for cid, got in cents:
         members = [vecs[vid] for vid, a in assign.items() if a == cid]
         for pos, got_x in enumerate(got):
-            s = sum(
-                Decimal(repr(m[pos])).quantize(q12, rounding=ROUND_HALF_UP)
-                for m in members
-            )
+            s = sum(to_decimal(m[pos], 12) for m in members)
             import math
 
             mean = float(s) / len(members)

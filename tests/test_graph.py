@@ -60,24 +60,26 @@ def _events(tmp_path, sql: str) -> str:
     return str(tmp_path)
 
 
-def _assert_pagerank_is_oracle(spark, sf_dir: str) -> list:
+def _assert_is_oracle(spark, name: str, sf_dir: str) -> list:
     """Bit-exact, order-insensitive; returns the Spark rows."""
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
-    want = con.sql(ORACLES["graph_pagerank"]).fetchall()
-    rows = Q["graph_pagerank"](spark, sf_dir).collect()
+    want = con.sql(ORACLES[name]).fetchall()
+    rows = Q[name](spark, sf_dir).collect()
     assert sorted(map(tuple, rows), key=repr) == sorted(want, key=repr)
     return rows
 
 
-def test_pagerank_sees_a_rewritten_input(spark, tmp_path):
+@pytest.mark.parametrize("name", ["graph_pagerank", "graph_triangles"])
+def test_pagerank_sees_a_rewritten_input(spark, tmp_path, name):
     """A second run in the same session after the events file is
-    rewritten must rank the new graph, not a cached copy of the old."""
+    rewritten must answer for the new graph, not a cached copy of the
+    old."""
     d = _events(tmp_path, "SELECT * FROM src")
-    assert len(_assert_pagerank_is_oracle(spark, d)) == 5
-    _events(tmp_path, "SELECT * FROM src WHERE event_type <> 'error'")
-    rows = _assert_pagerank_is_oracle(spark, d)
-    assert sorted(r["event_type"] for r in rows) == ["click", "purchase", "signup", "view"]
+    assert len(_assert_is_oracle(spark, name, d)) == 5
+    _events(tmp_path, "SELECT * FROM src WHERE event_type NOT IN ('error', 'click')")
+    rows = _assert_is_oracle(spark, name, d)
+    assert sorted(r["event_type"] for r in rows) == ["purchase", "signup", "view"]
 
 
 @pytest.mark.parametrize(
@@ -89,14 +91,17 @@ def test_pagerank_sees_a_rewritten_input(spark, tmp_path):
         "SELECT * EXCLUDE (k) FROM (SELECT *, row_number() OVER ("
         "PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS k FROM src) "
         "WHERE event_type <> 'error' OR k = 1",
+        # about 66 nodes: ties, many dangling nodes and the NULL node
+        "SELECT * REPLACE (CASE WHEN event_id % 97 = 0 THEN NULL "
+        "ELSE event_type || '-' || (user_id % 13) END AS event_type) FROM src",
     ],
-    ids=["empty", "null_types", "dangling"],
+    ids=["empty", "null_types", "dangling", "many_nodes"],
 )
 def test_pagerank_matches_oracle_on_edge_inputs(spark, tmp_path, sql):
-    _assert_pagerank_is_oracle(spark, _events(tmp_path, sql))
+    _assert_is_oracle(spark, "graph_pagerank", _events(tmp_path, sql))
 
 
 def test_pagerank_of_a_single_event_type_is_one(spark, tmp_path):
     d = _events(tmp_path, "SELECT * REPLACE ('view' AS event_type) FROM src")
-    rows = _assert_pagerank_is_oracle(spark, d)
+    rows = _assert_is_oracle(spark, "graph_pagerank", d)
     assert [(r["event_type"], r["pagerank"], r["rank"]) for r in rows] == [("view", 1.0, 1)]

@@ -154,7 +154,6 @@ SP_WINDOW_RE = re.compile(
 # definition site
 ALLOW_SP_WINDOW = {
     "sketch_quantile_histogram": 1,  # cum over <=64 histogram bins
-    "graph_pagerank": 1,  # final rank over the |event_types|-row node frame
     # dense-rank over DISTINCT per-supplier counts: sum of distinct
     # count values <= |lineitem|, so the frame is <= sqrt(2N) scalar
     # rows — sublinear by construction (relational.py window_rank_dense)
