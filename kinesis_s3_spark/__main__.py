@@ -75,6 +75,8 @@ def main(argv: list[str] | None = None) -> int:
         )
         query.awaitTermination()
     except Exception as e:  # noqa: BLE001 — top-level crash reporting (O20)
+        # the one Sentry capture: a startup error, or the failed query's
+        # exception re-raised by awaitTermination (no listener reports it)
         capture_error(e)
         raise
     return 0

@@ -752,7 +752,11 @@ def kcenter_greedy_frame(spark: SparkSession, vv: DataFrame, k: int) -> DataFram
     the per-round Python stage dispatch. The batched variant, whose
     candidate set is 4× larger and whose scans dominate, DID move to
     _kc_min_dist_arrow."""
-    seed = vv.filter(F.col("vec_id") == 0).select("vec_id", "e").collect()[0]
+    schema = "sel_order int, vec_id long, radius_before double"
+    seeds = vv.filter(F.col("vec_id") == 0).select("vec_id", "e").collect()
+    if not seeds:  # no seed vector: the oracle selects nothing
+        return spark.createDataFrame([], schema)
+    seed = seeds[0]
     picks = [(0, int(seed["vec_id"]), 0.0)]
     cur = vv.withColumn("mind", _kc_dist(F.col("e"), [float(x) for x in seed["e"]]))
     for i in range(1, k):
@@ -771,9 +775,7 @@ def kcenter_greedy_frame(spark: SparkSession, vv: DataFrame, k: int) -> DataFram
                     _kc_dist(F.col("e"), [float(x) for x in top["e"]]),
                 ),
             )
-    return spark.createDataFrame(
-        picks, "sel_order int, vec_id long, radius_before double"
-    )
+    return spark.createDataFrame(picks, schema)
 
 
 # --- batched k-center (k-means||-style oversampling) -------------------------
@@ -916,7 +918,13 @@ def kcenter_batched_frame(
 ) -> DataFrame:
     """Reusable core over a cached (vec_id, e) frame; its crossover
     against the greedy core is in SCALE.md, "Batched k-center (r9)"."""
-    seed = vv.filter(F.col("vec_id") == 0).select("vec_id", "e").collect()[0]
+    schema = "sel_order int, vec_id long, radius_before double, corpus_radius double"
+    seeds = vv.filter(F.col("vec_id") == 0).select("vec_id", "e").collect()
+    if not seeds:
+        # no seed vector: the oracle keeps only its literal first pick,
+        # and no center covers anything
+        return spark.createDataFrame([(0, 0, 0.0, None)], schema)
+    seed = seeds[0]
     cand: list[tuple[int, list[float]]] = [(0, [float(x) for x in seed["e"]])]
     for p in range(passes):
         # mind rebuilt FLAT from all candidates so far: min is
@@ -973,10 +981,7 @@ def kcenter_batched_frame(
         .agg(F.max("mind"))
         .collect()[0][0]
     )
-    return spark.createDataFrame(
-        [(o, i, rb, radius) for o, i, rb in picks],
-        "sel_order int, vec_id long, radius_before double, corpus_radius double",
-    )
+    return spark.createDataFrame([(o, i, rb, radius) for o, i, rb in picks], schema)
 
 
 @query("emb_kcenter_batched", oracle=_KCENTER_BATCHED_SQL)

@@ -165,10 +165,13 @@ def emit(
 
     ``now``: the batch's time decoration instant. For replay-idempotent
     output with ``date_format`` set, this MUST be batch-stable — the
-    loader passes RunMeta.batch_time(batch_id) (first-seen time,
-    replayed verbatim); wall-clock here is only the batch-mode default.
+    loader passes the batch's ``batchTimestampMs`` from the checkpoint's
+    offset log (``<ckpt>/offsets/<batch_id>``, written before the batch
+    runs and reused on replay); wall-clock here is only the batch-mode
+    default.
 
-    ``run_id``: checkpoint-lifetime namespace (RunMeta.run_id). When
+    ``run_id``: checkpoint-lifetime namespace (the query id in
+    ``<ckpt>/metadata``). When
     set, output nests under ``run=<id>/batch_id=<n>`` so a reset
     checkpoint (batch ids restarting at 0) can never overwrite a prior
     run's committed directories."""

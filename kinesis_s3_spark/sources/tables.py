@@ -17,6 +17,13 @@ the confs that change what parquet inference yields (``_INFER_CONFS``),
 so a rewritten file or a changed conf is inferred again. A path that is
 not a regular local file (a directory of parts, whose stat does not
 cover its parts, or a remote URI) is inferred on every load.
+
+Cache refresh: Spark matches a read of a file to cached data by path
+alone, so a frame a query ``.cache()``d from a file stays in the
+session's cache after the file is rewritten, and the next run of the
+query answers from it. A memo miss therefore first calls
+``spark.catalog.refreshByPath``. Paths that skip the memo (directories
+and remote URIs) are not refreshed.
 """
 
 from __future__ import annotations
@@ -78,6 +85,9 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     schema = _schemas.get(key)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
+    # a miss means a new or rewritten file: frames a query cached from an
+    # older read of this path would otherwise answer for the old data
+    spark.catalog.refreshByPath(path)
     df = spark.read.parquet(path)
     with _schemas_lock:
         _schemas[key] = df.schema

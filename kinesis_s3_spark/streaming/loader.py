@@ -24,6 +24,9 @@ reference never integration-tests KCL either (SURVEY §5).
 
 from __future__ import annotations
 
+import json
+from datetime import datetime, timedelta, timezone
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -32,7 +35,6 @@ from kinesis_s3_spark.config import InitialPosition, LoaderConfig
 from kinesis_s3_spark.sinks.badrows_sink import build_bad_sink
 from kinesis_s3_spark.sinks.emitter import emit
 from kinesis_s3_spark.streaming.monitoring import LoaderListener, init_sentry
-from kinesis_s3_spark.streaming.runmeta import RunMeta
 from kinesis_s3_spark.streaming.tracking import SnowplowTracker
 
 
@@ -108,6 +110,36 @@ def s3a_options(s3_cfg) -> dict[str, str]:
     }
 
 
+def _checkpoint_reader(spark: SparkSession, checkpoint_location: str):
+    """Reads a file under the checkpoint as text, through the session's
+    Hadoop FileSystem, so local, s3a:// and hdfs:// checkpoints work
+    alike."""
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    base = Path(checkpoint_location)
+    fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def read(name: str) -> str:
+        stream = fs.open(Path(base, name))
+        try:
+            return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+
+    return read
+
+
+def offset_log_batch_time(text: str, name: str) -> datetime:
+    """``batchTimestampMs`` of an offset-log entry: first line ``v1``,
+    second line the batch metadata JSON. Spark writes the entry before
+    the batch runs and reuses it when the batch is replayed."""
+    version, _, rest = text.partition("\n")
+    if version != "v1":
+        raise ValueError(f"{name}: unsupported offset log version {version!r}")
+    ms = json.loads(rest.partition("\n")[0])["batchTimestampMs"]
+    return datetime(1970, 1, 1, tzinfo=timezone.utc) + timedelta(milliseconds=ms)
+
+
 def run_loader(
     spark: SparkSession,
     cfg: LoaderConfig,
@@ -145,7 +177,16 @@ def run_loader(
     streaming/histogram.py:SizeHistogramAccumulator), applied in order
     after the flush. Replay-safe means an accumulator skips re-delivered
     batch ids and reloads its state file on restart; the accumulators
-    here get both from streaming/replay_state.py:ReplayState."""
+    here get both from streaming/replay_state.py:ReplayState.
+
+    With ``checkpoint_location`` set, batch n is written under
+    ``run=<query id>/batch_id=<n>`` and date-decorated with its trigger
+    time, both read from the checkpoint: the query id from
+    ``<ckpt>/metadata``, the time from the ``batchTimestampMs`` of
+    ``<ckpt>/offsets/<n>``. A replayed batch therefore overwrites its
+    own directory, and a reset checkpoint writes into a new namespace.
+    Without one, output has no run namespace and is decorated with
+    wall-clock time."""
     # output.s3.customEndpoint → s3a endpoint conf, applied before the
     # sink writes its first object (the buildS3Client analogue)
     hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -164,22 +205,23 @@ def run_loader(
     # exists/ACTIVE probe must fail the app at startup, before the
     # query runs (S3Loader.scala:39, KinesisSink.scala:49)
     bad_sink = build_bad_sink(cfg)
-    # replay-safety sidecar (streaming/runmeta.py): run-unique output
-    # namespace + batch-stable date decoration, both required for the
-    # per-batch overwrite in emit() to be truly idempotent
-    run_meta = (
-        RunMeta(spark, cfg.checkpoint_location) if cfg.checkpoint_location else None
+    read = (
+        _checkpoint_reader(spark, cfg.checkpoint_location)
+        if cfg.checkpoint_location
+        else None
     )
+    run_id = None
 
     def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        meta = emit(
-            batch_df,
-            batch_id,
-            cfg,
-            now=run_meta.batch_time(batch_id) if run_meta else None,
-            bad_sink=bad_sink,
-            run_id=run_meta.run_id if run_meta else None,
-        )
+        nonlocal run_id
+        now = None
+        if read is not None:
+            # Spark writes <ckpt>/metadata when the query starts
+            if run_id is None:
+                run_id = json.loads(read("metadata"))["id"]
+            name = f"offsets/{batch_id}"
+            now = offset_log_batch_time(read(name), f"{cfg.checkpoint_location}/{name}")
+        meta = emit(batch_df, batch_id, cfg, now=now, bad_sink=bad_sink, run_id=run_id)
         for acc in accumulators:
             acc.update(batch_df, batch_id)
         if on_flush is not None:

@@ -225,7 +225,9 @@ class LoaderListener(L.StreamingQueryListener):
     query). When that query ends, the listener sends
     ``storage_write_failed`` with the exception message if it failed,
     then stops the tracker: heartbeats off, ``app_shutdown`` sent
-    (SnowplowTracking.scala:92-95,117-145)."""
+    (SnowplowTracking.scala:92-95,117-145). It does not report the
+    failure to Sentry: ``python -m kinesis_s3_spark`` captures it once,
+    where ``awaitTermination`` raises."""
 
     def __init__(
         self, statsd: StatsDClient | None = None, tracker: SnowplowTracker | None = None
@@ -246,8 +248,6 @@ class LoaderListener(L.StreamingQueryListener):
         pass
 
     def onQueryTerminated(self, event: L.QueryTerminatedEvent) -> None:
-        if event.exception:
-            capture_error(RuntimeError(str(event.exception)))
         if self.tracker is None or str(event.id) != self._query_id:
             return
         try:

@@ -1,12 +1,24 @@
-"""Embedding utility operators: invariants beyond the oracle gate."""
+"""Embedding utility operators: invariants beyond the oracle gate, and
+the k-center queries against the oracle on inputs without a seed."""
 
 from __future__ import annotations
 
+import os
+import sys
+
+import duckdb
+import pytest
+
+import __spark_entry__ as entrymod
 from kinesis_s3_spark.operators.embeddings import (
     emb_label_centroids,
     emb_normalize_quantize,
 )
 from tests.conftest import SF_SMOKE
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+
+from check_correctness import compare  # noqa: E402
 
 
 def test_quantize_norm_and_digest(spark):
@@ -334,3 +346,19 @@ def test_lloyd_round_means_are_exact_decimal(spark):
             mean = float(s) / len(members)
             want = math.trunc(mean * 1e6 + math.copysign(0.5, mean)) / 1e6
             assert got_x == want, (cid, pos, got_x, want)
+
+
+@pytest.mark.parametrize(
+    "where", ["false", "vec_id <> 0"], ids=["empty", "no_vec_id_0"]
+)
+@pytest.mark.parametrize("name", ["emb_kcenter_coreset", "emb_kcenter_batched"])
+def test_kcenter_matches_oracle_without_a_seed(spark, tmp_path, name, where):
+    """Both k-center queries seed with vec_id 0. Without it they answer
+    as the oracle does: the coreset selects nothing, the batched query
+    keeps its first pick with no corpus radius."""
+    con = duckdb.connect()
+    path = f"{tmp_path}/embeddings.parquet"
+    con.execute(f"COPY (SELECT * FROM '{SF_SMOKE}/embeddings.parquet' WHERE {where}) TO '{path}'")
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    out = compare(name, entrymod.queries()[name](spark, str(tmp_path)), entrymod.oracle_sql()[name], con)
+    assert out["rows_match"] and out["cols_match"] and out["values_match"], out

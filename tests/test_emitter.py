@@ -9,6 +9,8 @@ import glob
 import gzip
 import json
 
+import pytest
+
 from kinesis_s3_spark.config import from_dict
 from kinesis_s3_spark.sinks.emitter import emit
 
@@ -197,43 +199,6 @@ def test_byte_limit_bounds_object_size(spark, tmp_path):
     assert sorted(seen) == sorted(r[0] for r in rows)  # nothing lost to the roll
 
 
-def test_runmeta_replay_stable(spark, tmp_path):
-    """RunMeta: run_id survives re-instantiation on the same checkpoint
-    (crash-restart) and batch times replay verbatim; a wiped checkpoint
-    mints a FRESH run_id so batch_id=0 of the new run can never
-    overwrite the old run's commits."""
-    from kinesis_s3_spark.streaming.runmeta import RunMeta
-
-    ckpt = str(tmp_path / "ckpt")
-    m1 = RunMeta(spark, ckpt)
-    t0 = m1.batch_time(0)
-    m2 = RunMeta(spark, ckpt)  # restart against same checkpoint
-    assert m2.run_id == m1.run_id
-    assert m2.batch_time(0) == t0  # replayed batch keeps its decoration time
-
-    m3 = RunMeta(spark, str(tmp_path / "ckpt2"))  # checkpoint reset
-    assert m3.run_id != m1.run_id
-
-
-def test_replay_idempotent_with_date_format(spark, tmp_path):
-    """The round-2 defect: with date_format set, a replay using the
-    RunMeta-stable time must land in (and overwrite) the SAME
-    time-decorated directory — no duplicate output across dirs."""
-    from kinesis_s3_spark.streaming.runmeta import RunMeta
-
-    cfg = _cfg(tmp_path, date_format="{YYYY}/{MM}/{dd}/{HH}")
-    meta = RunMeta(spark, str(tmp_path / "ckpt"))
-    df = spark.createDataFrame([(v,) for v in SDJ_ROWS], "value string")
-    emit(df, batch_id=2, cfg=cfg, now=meta.batch_time(2), run_id=meta.run_id)
-    emit(df, batch_id=2, cfg=cfg, now=meta.batch_time(2), run_id=meta.run_id)  # replay
-
-    everything = _read_gzip_lines(str(tmp_path / "out" / "**" / "*.gz"))
-    assert sorted(everything) == sorted(SDJ_ROWS)  # exactly once, not twice
-    # and the run namespace is part of the layout
-    dirs = glob.glob(str(tmp_path / "out" / "**" / f"run={meta.run_id}" / "batch_id=2"), recursive=True)
-    assert len(dirs) == 1
-
-
 # a production-sized flush buffer: the config default rolls every 2 KiB
 MIB64 = 64 * 1024 * 1024
 
@@ -380,33 +345,110 @@ def test_gzip_indexed_emit_outside_repo_root(tmp_path):
     assert sorted(json.loads(v)["data"]["id"] for v in lines) == list(range(50))
 
 
-def test_run_ids_never_read_as_numbers(monkeypatch):
-    """Minted run ids always hold a letter and never parse as a number
-    (Spark's partition discovery would make ``run`` numeric), whatever
-    uuid4 draws."""
-    import uuid
+# --- replay safety through run_loader: run id and batch time come from
+# Spark's own checkpoint (<ckpt>/metadata, <ckpt>/offsets/<n>)
 
-    from kinesis_s3_spark.streaming import runmeta
+SECONDS_FORMAT = "{YYYY}/{MM}/{dd}/{HH}/{mm}/{ss}"
 
-    draws = iter(
-        [
-            "012345678901" + "0" * 20,  # all digits
-            "207e90628546" + "0" * 20,  # <digits>e<digits>
-            "12345678901d" + "0" * 20,  # Java double suffix
-            "123456789e1f" + "0" * 20,  # exponent and suffix
-            "1234e56789f0" + "0" * 20,  # not a number: the f is inside
-        ]
+
+def _stream_cfg(tmp_path, ckpt, **s3extra):
+    inp = tmp_path / "in"
+    if not inp.exists():
+        inp.mkdir()
+        (inp / "part-0.txt").write_text("\n".join(SDJ_ROWS[:4]) + "\n")
+    return from_dict(
+        {
+            "purpose": "SELF_DESCRIBING",
+            "input": {"stream_name": "t", "kind": "file", "path": str(inp), "format": "text"},
+            "output": {
+                "s3": {"path": str(tmp_path / "out"), "compression": "GZIP", **s3extra},
+                "bad_path": str(tmp_path / "bad"),
+            },
+            "buffer": {"time_limit_ms": 250},
+            "checkpoint_location": str(tmp_path / ckpt),
+        }
     )
-    monkeypatch.setattr(runmeta.uuid, "uuid4", lambda: uuid.UUID(next(draws)))
-    assert runmeta._mint_run_id() == "1234e56789f0"
 
 
-def test_runmeta_keeps_existing_numeric_run_id(spark, tmp_path):
-    """An id already recorded in run.json is kept as it is, so a
-    restarted loader keeps writing into its own run namespace."""
-    from kinesis_s3_spark.streaming.runmeta import RunMeta
+def _drain(spark, cfg, name):
+    from kinesis_s3_spark.streaming.loader import run_loader
 
+    q = run_loader(spark, cfg, query_name=name)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q
+
+
+def test_loader_replays_a_batch_into_its_own_directory(spark, tmp_path):
+    """A batch whose commit was lost is replayed after a restart more
+    than a second later. With the date decoration down to seconds, the
+    replay reads the batch time back from the offset log and overwrites
+    the same directory: every record lands once."""
+    import time
+
+    from kinesis_s3_spark.functions.paths import decorate_directory_with_time
+    from kinesis_s3_spark.streaming.loader import offset_log_batch_time
+
+    cfg = _stream_cfg(tmp_path, "ckpt", date_format=SECONDS_FORMAT)
+    q = _drain(spark, cfg, "replay-a")
     ckpt = tmp_path / "ckpt"
-    (ckpt / "emitter_meta").mkdir(parents=True)
-    (ckpt / "emitter_meta" / "run.json").write_text(json.dumps({"run_id": "012345678901"}))
-    assert RunMeta(spark, str(ckpt)).run_id == "012345678901"
+    for f in (ckpt / "commits").iterdir():  # lose batch 0's commit (and its .crc)
+        f.unlink()
+    time.sleep(1.5)
+    _drain(spark, cfg, "replay-b")
+
+    assert (ckpt / "commits" / "0").exists()  # the replay ran and committed
+    offsets = ckpt / "offsets" / "0"
+    t = offset_log_batch_time(offsets.read_text(), str(offsets))
+    want = tmp_path / "out" / decorate_directory_with_time(SECONDS_FORMAT, t) / f"run={q.id}" / "batch_id=0"
+    assert glob.glob(str(tmp_path / "out" / "**" / "batch_id=*"), recursive=True) == [str(want)]
+    assert sorted(_read_gzip_lines(f"{want}/**/*.gz")) == sorted(SDJ_ROWS[:4])
+    assert not (ckpt / "emitter_meta").exists()
+
+
+def test_loader_reset_checkpoint_gets_a_new_run(spark, tmp_path):
+    """A new checkpoint over the same output path writes batch 0 under a
+    new ``run=`` namespace, named by the query id, and leaves the old
+    run's batch 0 as it was."""
+    q1 = _drain(spark, _stream_cfg(tmp_path, "ckpt1"), "reset-a")
+    old = tmp_path / "out" / f"run={q1.id}" / "batch_id=0"
+    before = {f: open(f, "rb").read() for f in glob.glob(f"{old}/**/*.gz", recursive=True)}
+    assert before
+    q2 = _drain(spark, _stream_cfg(tmp_path, "ckpt2"), "reset-b")
+
+    assert q1.id != q2.id
+    runs = sorted(glob.glob(str(tmp_path / "out" / "run=*")))
+    assert runs == sorted(str(tmp_path / "out" / f"run={q.id}") for q in (q1, q2))
+    after = {f: open(f, "rb").read() for f in glob.glob(f"{old}/**/*.gz", recursive=True)}
+    assert after == before
+    new = tmp_path / "out" / f"run={q2.id}" / "batch_id=0"
+    assert sorted(_read_gzip_lines(f"{new}/**/*.gz")) == sorted(SDJ_ROWS[:4])
+
+
+def test_loader_all_digit_query_id_reads_as_a_string(spark, tmp_path):
+    """A query id of digits and dashes, pre-written to the checkpoint's
+    metadata, becomes the run namespace, and partition discovery reads
+    it back as a string."""
+    from kinesis_s3_spark.sources.archive import read_archive
+
+    run_id = "12345678-1234-1234-1234-123456789012"
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    (ckpt / "metadata").write_text(json.dumps({"id": run_id}) + "\n")
+    q = _drain(spark, _stream_cfg(tmp_path, "ckpt"), "digit-id")
+    assert str(q.id) == run_id
+
+    df = read_archive(spark, str(tmp_path / "out"))
+    assert dict(df.dtypes)["run"] == "string"
+    assert {r["run"] for r in df.select("run").distinct().collect()} == {run_id}
+
+
+def test_offset_log_version_is_checked():
+    from kinesis_s3_spark.streaming.loader import offset_log_batch_time
+
+    t = offset_log_batch_time('v1\n{"batchWatermarkMs":0,"batchTimestampMs":1500}\n{}', "o/0")
+    assert t.isoformat() == "1970-01-01T00:00:01.500000+00:00"
+    with pytest.raises(ValueError, match="ckpt/offsets/7"):
+        offset_log_batch_time('v2\n{"batchTimestampMs":1500}', "ckpt/offsets/7")

@@ -738,7 +738,7 @@ def test_streaming_cdc_merge_matches_batch_across_restart(spark, tmp_path):
         target-side old state of the keys the batch operator marks
         update/delete.
     Replay safety: re-delivering the last batch must not change the
-    table (the emitter's RunMeta idempotence contract)."""
+    table (the emitter's replay idempotence contract)."""
     import pyspark.sql.functions as F
 
     import __spark_entry__ as entrymod

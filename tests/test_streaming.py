@@ -11,6 +11,8 @@ import json
 import socket
 import time
 
+import pytest
+
 from kinesis_s3_spark.config import from_dict
 from kinesis_s3_spark.sinks.emitter import BatchMeta
 from kinesis_s3_spark.streaming.loader import run_loader
@@ -736,3 +738,76 @@ def test_streaming_mmd_twin_matches_batch_emb_drift(spark, tmp_path):
     recv.close()
     # the two arms cross on the SAME tranche — the shifted one
     assert first_alert_tranche == batch_first_drift == 2
+
+
+@pytest.mark.parametrize("collector", [None, "http://127.0.0.1:9"], ids=["no_collector", "collector"])
+def test_a_failed_loader_is_captured_once(spark, tmp_path, monkeypatch, collector):
+    """``python -m kinesis_s3_spark`` reports a failed query to Sentry
+    exactly once, with or without a Snowplow collector configured."""
+    import threading
+
+    from pyspark.errors import StreamingQueryException
+
+    from kinesis_s3_spark import __main__ as cli
+    from kinesis_s3_spark.streaming import monitoring, tracking
+
+    captured, sent = [], []
+
+    class FakeSDK:
+        @staticmethod
+        def init(dsn=None):
+            pass
+
+        @staticmethod
+        def capture_exception(error):
+            captured.append(error)
+
+    listeners, terminated = [], threading.Event()
+
+    class Listener(LoaderListener):
+        def __init__(self, **kw):
+            super().__init__(**kw)
+            listeners.append(self)
+
+        def onQueryTerminated(self, event):
+            super().onQueryTerminated(event)
+            terminated.set()
+
+    def refuse(self, meta):
+        raise RuntimeError("s3 put refused")
+
+    monkeypatch.setattr(monitoring, "sentry_sdk", FakeSDK)
+    monkeypatch.setattr(monitoring.StatsDClient, "report", refuse)
+    monkeypatch.setattr(tracking, "_http_send", lambda uri: sent.append)
+    monkeypatch.setattr(cli, "get_spark", lambda app_name: spark)
+    monkeypatch.setattr(cli, "LoaderListener", Listener)
+    inp = str(tmp_path / "in")
+    _write_input(spark, inp, ["x"])
+    monitoring_cfg = {"sentry_dsn": "https://key@sentry.invalid/1"}
+    if collector:
+        monitoring_cfg["snowplow"] = {"collector": collector}
+    config = tmp_path / "config.json"
+    config.write_text(
+        json.dumps(
+            {
+                "purpose": "RAW",
+                "input": {"stream_name": "t", "kind": "file", "path": inp, "format": "parquet"},
+                "output": {"s3": {"path": str(tmp_path / "out"), "compression": "GZIP"}},
+                "buffer": {"time_limit_ms": 250},
+                "monitoring": monitoring_cfg,
+                "checkpoint_location": str(tmp_path / "ckpt"),
+            }
+        )
+    )
+    try:
+        with pytest.raises(StreamingQueryException):
+            cli.main(["--config", str(config)])
+        # wait until the listeners have handled the termination
+        assert terminated.wait(timeout=10)
+        if collector:
+            assert [n for n, _ in _tracked_events(sent)][-1] == "app_shutdown"
+    finally:
+        for listener in listeners:
+            spark.streams.removeListener(listener)
+    assert len(captured) == 1, captured
+    assert "s3 put refused" in str(captured[0])

@@ -1,17 +1,26 @@
 """Table loader tests: the parquet schema memo in ``load_table`` skips
-inference for an unchanged file and never serves a stale schema."""
+inference for an unchanged file and never serves a stale schema, and a
+query that caches a table's frames answers for a rewritten file."""
 
 from __future__ import annotations
 
+import os
+import sys
 import uuid
 from datetime import datetime
 
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
+import __spark_entry__ as entrymod
 from kinesis_s3_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+
+from check_correctness import compare  # noqa: E402
 
 
 def _jobs(spark, fn) -> int:
@@ -89,3 +98,38 @@ def test_nanos_events_read_on_a_bare_session(spark, tmp_path):
         df = load_table(spark, str(tmp_path), "events")
         assert dict(df.dtypes)["ts"] == "timestamp_ntz"
         assert [r["ts"] for r in df.orderBy("event_id").collect()] == ts
+
+
+# table -> the filter that rewrites it: drop every third row
+REWRITES = {"documents": "doc_id % 3 <> 0", "embeddings": "vec_id % 3 <> 0", "events": "event_id % 3 <> 0"}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_minhash_lsh",
+        "emb_kmeans",
+        "dedup_semantic",
+        "events_rfm_segments",
+        "text_tfidf_simjoin",
+        "graph_label_propagation",
+    ],
+)
+def test_cached_query_sees_a_rewritten_table(spark, tmp_path, name):
+    """These queries ``.cache()`` frames read from a table. A second run
+    in the same session, after the table files are rewritten, must match
+    the oracle on the new data, not answer from the cached old data."""
+    con = duckdb.connect()
+    for table in REWRITES:
+        _write(f"{tmp_path}/{table}.parquet", f"SELECT * FROM '{SF_SMOKE}/{table}.parquet'")
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{tmp_path}/{table}.parquet'")
+    query, oracle = entrymod.queries()[name], entrymod.oracle_sql()[name]
+    for rewrite in (False, True):
+        if rewrite:
+            for table, keep in REWRITES.items():
+                _write(
+                    f"{tmp_path}/{table}.parquet",
+                    f"SELECT * FROM '{SF_SMOKE}/{table}.parquet' WHERE {keep}",
+                )
+        out = compare(name, query(spark, str(tmp_path)), oracle, con)
+        assert out["rows_match"] and out["cols_match"] and out["values_match"], (rewrite, out)

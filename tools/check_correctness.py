@@ -10,6 +10,7 @@ Usage: python tools/check_correctness.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
@@ -72,7 +73,8 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    # the package of the checkout this script is in, not an installed one
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from kinesis_s3_spark.session import get_spark
 
